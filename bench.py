@@ -1,21 +1,30 @@
 """Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
+Prints a per-query detail JSON line, then ONE short JSON line last:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query executes through the noop sink — the full physical plan runs
 (scan → shuffles → result) without driver-side row transfer, so the
-number measures the engine, not py4j serialization.
+number measures the engine, not py4j serialization. Every mode times
+through the one loop in `time_queries`.
+
+    python bench.py                   # all headline queries, min of 3
+    python bench.py --record          # same, and rewrite BENCH_detail.json
+    python bench.py --compare SHA     # paired cur/base ratios vs commit SHA
+    python bench.py --only q1,q2      # a subset of the headline (any mode)
+    python bench.py --trace           # also write the per-query layer table
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
 import sys
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -287,6 +296,18 @@ def _copy_fixture(src: str, dst: str) -> None:
         shutil.copyfile(src, dst)
 
 
+def scratch_dir(prefix: str) -> str:
+    """A per-run temp directory, reaped on exit so repeated bench runs
+    don't accumulate dataset copies or event logs under /tmp."""
+    import atexit
+    import shutil
+    import tempfile
+
+    out = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    return out
+
+
 def restage_fixtures(spark, sf_dir: str) -> str:
     """Rewrite the fixture tables into an n-file-per-table layout.
 
@@ -304,16 +325,9 @@ def restage_fixtures(spark, sf_dir: str) -> str:
     and it is reported in the output (``restage_s``), not hidden.
     Row contents are identical (same multiset; every registered query
     is order-insensitive by the registry convention)."""
-    import atexit
-    import shutil
-    import tempfile
-
     from dataextractor_spark.catalog import TABLES, load_table
 
-    out = tempfile.mkdtemp(prefix="bench_restage_")
-    # the restaged copy is per-run scratch — reap it on exit so
-    # repeated bench runs don't accumulate dataset copies under /tmp
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    out = scratch_dir("bench_restage_")
     for t in TABLES:
         n = _RESTAGE_FILES.get(t, 1)
         if n <= 1:
@@ -333,6 +347,137 @@ def restage_fixtures(spark, sf_dir: str) -> str:
             f"{out}/{t}.parquet"
         )
     return out
+
+
+def bench_session(app_name: str, event_dir: str | None = None):
+    """The session every bench mode times on. With the restaged
+    multi-file layout, a 4MB split (vs the 128MB default) packs the
+    small per-file chunks into enough partitions to feed every core. On
+    a real cluster with many ≥128MB files the default is correct — this
+    override is bench-local, not engine policy. ``event_dir`` turns on
+    the Spark event log there (uncompressed, one unrolled file) for
+    the ``--trace`` fold."""
+    conf = {"spark.sql.files.maxPartitionBytes": "4194304"}
+    if event_dir:
+        conf.update({
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": event_dir,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        })
+    return get_session(app_name=app_name, extra_conf=conf)
+
+
+class Side(NamedTuple):
+    """One version of the code to time: its registry specs, the package
+    modules to swap into sys.modules around each run (None keeps the
+    current ones), and a data directory overriding the loop's."""
+
+    specs: dict
+    mods: dict | None = None
+    sf_dir: str | None = None
+
+
+class Run(NamedTuple):
+    """One timed query: wall seconds, split into the build
+    (``fn(spark, sf)``) and exec (noop write) phases, and the job-group
+    prefix its Spark jobs ran under (None when untraced)."""
+
+    wall: float
+    build_s: float
+    exec_s: float
+    group: str | None
+
+
+def _run(spark, side: Side, sf_dir: str, name: str, group=None) -> Run:
+    if side.mods is not None:
+        _swap_in(side.mods)
+    sc = spark.sparkContext
+    if group:
+        sc.setJobGroup(f"{group}|build", name)
+    t0 = time.perf_counter()
+    df = side.specs[name].fn(spark, side.sf_dir or sf_dir)
+    t1 = time.perf_counter()
+    if group:
+        sc.setJobGroup(f"{group}|exec", name)
+    df.write.mode("overwrite").format("noop").save()
+    t2 = time.perf_counter()
+    return Run(t2 - t0, t1 - t0, t2 - t1, group)
+
+
+def time_queries(
+    spark, sf_dir: str, names, sides: dict, reps: int = N_REPS,
+    trace: bool = False,
+) -> dict:
+    """The one timing loop: returns {side: {name: Run}} holding each
+    query's min-wall run over ``reps`` interleaved repetitions.
+
+    Each side's codegen path is warmed once outside timing. Per rep and
+    per QUERY the sides rotate which runs first: the first run of a
+    query shape pays JIT/codegen warm-up, and a fixed first side absorbs
+    all of it (measured: identical code showed median 1.26 at reps=1
+    with cur always first). Rotation cancels the bias in the median even
+    at reps=1; min-over-reps kills it entirely at reps>=2. With
+    ``trace`` every run's jobs are tagged ``side|name|rep|phase``."""
+    labels = list(sides)
+    for label in labels:
+        _run(spark, sides[label], sf_dir, "flagship_pricing_summary")
+    best: dict = {label: {} for label in labels}
+    for rep in range(reps):
+        for qi, name in enumerate(names):
+            k = (rep + qi) % len(labels)
+            for label in labels[k:] + labels[:k]:
+                group = f"{label}|{name}|{rep}" if trace else None
+                run = _run(spark, sides[label], sf_dir, name, group)
+                kept = best[label].get(name)
+                if kept is None or run.wall < kept.wall:
+                    best[label][name] = run
+    return best
+
+
+def write_trace(spark, event_dir: str, best: dict, note: str) -> None:
+    """Stop the session, fold its event log, and write each kept run's
+    layer split to the gitignored BENCH_trace_local.json. Per phase:
+    jobs, stages, tasks, executor run and CPU time, shuffle bytes,
+    spill, peak execution memory and the span its jobs covered
+    (``job_s``); per query, the driver gap: wall time outside every
+    job's span. So ``build_s + exec_s`` is the wall, and so is
+    ``build.job_s + exec.job_s + driver_gap_s``."""
+    from perfbench.trace import event_log_file, fold_event_log, union_ms
+
+    app_id = spark.sparkContext.applicationId
+    spark.stop()
+    groups = fold_event_log(event_log_file(event_dir, app_id))["groups"]
+    fields = {  # output name -> (fold key, scale)
+        "jobs": ("jobs", 1), "stages": ("stages", 1), "tasks": ("tasks", 1),
+        "executor_run_s": ("run_ms", 1e-3), "executor_cpu_s": ("cpu_ns", 1e-9),
+        "shuffle_read_bytes": ("shuffle_read", 1),
+        "shuffle_write_bytes": ("shuffle_write", 1),
+        "spill_bytes": ("spill", 1), "peak_exec_mem_bytes": ("peak_mem", 1),
+    }
+    table = {}
+    for label, runs in best.items():
+        rows = table[label] = {}
+        for name, run in runs.items():
+            row = rows[name] = {
+                "wall_s": round(run.wall, 3),
+                "build_s": round(run.build_s, 3),
+                "exec_s": round(run.exec_s, 3),
+            }
+            job_s = 0.0
+            for p in ("build", "exec"):
+                g = groups.get(f"{run.group}|{p}", {})
+                row[p] = {k: round(g.get(key, 0) * scale, 3)
+                          for k, (key, scale) in fields.items()}
+                span_s = union_ms(g.get("spans", [])) / 1e3
+                row[p]["job_s"] = round(span_s, 3)
+                job_s += span_s
+            row["driver_gap_s"] = round(max(0.0, run.wall - job_s), 3)
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        "BENCH_trace_local.json")
+    with open(path, "w") as f:
+        json.dump({"metric": "headline_trace", "provenance": note,
+                   "sides": table}, f, indent=1, sort_keys=True)
 
 
 _PKG = "dataextractor_spark"
@@ -379,7 +524,7 @@ def _load_base_side(base_root: str):
     return specs, base_mods
 
 
-def run_compare(base_sha: str, reps: int = N_REPS) -> None:
+def run_compare(base_sha: str, names, trace: bool = False) -> None:
     """Paired code-to-code control: bench HEAD's working tree against
     ``base_sha`` in ONE Spark session, interleaved per query.
 
@@ -406,66 +551,27 @@ def run_compare(base_sha: str, reps: int = N_REPS) -> None:
     )
     try:
         base_specs, base_mods = _load_base_side(wt)
-        cur_specs = load_all()
-        cur_mods = _pkg_modules()
-        names = [n for n in HEADLINE if n in base_specs]
-        skipped = [n for n in HEADLINE if n not in base_specs]
-        # optimization-iteration aid: restrict the paired run to a
-        # subset (comma-separated). The committed round evidence always
-        # comes from the full-headline run (variable unset).
-        only = os.environ.get("SPARK_GRAFT_COMPARE_ONLY")
-        if only:
-            keep = {s.strip() for s in only.split(",") if s.strip()}
-            names = [n for n in names if n in keep]
+        sides = {
+            "cur": Side(load_all(), _pkg_modules()),
+            "base": Side(base_specs, base_mods),
+        }
+        skipped = [n for n in names if n not in base_specs]
+        names = [n for n in names if n in base_specs]
 
-        spark = get_session(
-            app_name="dataextractor-spark-bench-compare",
-            extra_conf={"spark.sql.files.maxPartitionBytes": "4194304"},
-        )
+        event_dir = scratch_dir("bench_eventlog_") if trace else None
+        spark = bench_session("dataextractor-spark-bench-compare", event_dir)
         env_dir = os.environ.get(
             "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
         )
         sf_dir = restage_fixtures(spark, env_dir)
-
-        sides = {
-            "cur": (cur_specs, cur_mods),
-            "base": (base_specs, base_mods),
+        runs = time_queries(spark, sf_dir, names, sides, trace=trace)
+        _swap_in(sides["cur"].mods)
+        if trace:
+            write_trace(spark, event_dir, runs,
+                        f"bench.py --compare {base_sha} at {env_dir}")
+        best = {
+            s: {n: r.wall for n, r in per.items()} for s, per in runs.items()
         }
-
-        def _timed(side: str, name: str) -> float:
-            specs, mods = sides[side]
-            _swap_in(mods)
-            t0 = time.perf_counter()
-            specs[name].fn(spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            return time.perf_counter() - t0
-
-        # warm both sides' codegen paths outside timing
-        _timed("cur", "flagship_pricing_summary")
-        _timed("base", "flagship_pricing_summary")
-
-        best: dict[str, dict[str, float]] = {
-            s: {} for s in sides
-        }
-        for rep in range(reps):
-            for qi, name in enumerate(names):
-                # alternate which side runs first per QUERY as well as
-                # per rep: the first run of a query shape pays JIT/
-                # codegen warm-up, and a fixed first side absorbs all
-                # of it (measured: identical code showed median 1.26
-                # at reps=1 with cur always first). Per-query
-                # alternation cancels the bias in the median even at
-                # reps=1; min-over-reps kills it entirely at reps>=2.
-                order = (
-                    ("cur", "base") if (rep + qi) % 2 == 0 else ("base", "cur")
-                )
-                for side in order:
-                    dt = _timed(side, name)
-                    best[side][name] = min(
-                        best[side].get(name, float("inf")), dt
-                    )
-        _swap_in(cur_mods)
 
         ratios = {
             n: round(best["cur"][n] / best["base"][n], 3) for n in names
@@ -480,7 +586,7 @@ def run_compare(base_sha: str, reps: int = N_REPS) -> None:
             "base": {n: round(best["base"][n], 3) for n in names},
             "ratios": ratios,
             "skipped_not_in_base": skipped,
-            "reps": reps,
+            "reps": N_REPS,
         }
         with open(os.path.join(here, "BENCH_compare_local.json"), "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
@@ -503,50 +609,63 @@ def run_compare(base_sha: str, reps: int = N_REPS) -> None:
         )
 
 
-def main() -> None:
-    if "--compare" in sys.argv[1:]:
-        i = sys.argv.index("--compare")
-        run_compare(sys.argv[i + 1])
+def _parse_args(argv):
+    """Flags, plus the headline subset they select. Every check here
+    runs before a session starts."""
+    ap = argparse.ArgumentParser(
+        description="Time the headline queries through the noop sink."
+    )
+    ap.add_argument("--record", action="store_true",
+                    help="write the tracked BENCH_detail.json record")
+    ap.add_argument("--compare", metavar="SHA",
+                    help="paired cur/base run against commit SHA")
+    ap.add_argument("--only", metavar="Q1,Q2",
+                    help="time only these headline queries")
+    ap.add_argument("--trace", action="store_true",
+                    help="write the per-query layer table to "
+                         "BENCH_trace_local.json")
+    args = ap.parse_args(argv)
+    names = HEADLINE
+    if args.only is not None:
+        keep = {s.strip() for s in args.only.split(",") if s.strip()}
+        unknown = sorted(keep - set(HEADLINE))
+        if unknown or not keep:
+            ap.error("--only: not a headline query: "
+                     + (", ".join(unknown) or repr(args.only)))
+        names = [n for n in HEADLINE if n in keep]
+    if args.record and (args.compare or args.only or args.trace):
+        ap.error("--record writes the full-headline record; run it alone")
+    return args, names
+
+
+def main(argv=None) -> None:
+    args, names = _parse_args(argv)
+    if args.compare:
+        run_compare(args.compare, names, args.trace)
         return
     # The tracked BENCH_detail.json is a cross-round RECORD the judge
     # diffs; driver and smoke runs must not clobber it (round-9 verdict:
     # the driver's run overwrote the committed builder record in the
     # working tree). Only an explicit `--record` opts into writing the
     # tracked path; every other run writes the gitignored *_local file.
-    record = "--record" in sys.argv[1:]
+    record = args.record
     env_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", env_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    # With the restaged multi-file layout, a 4MB split (vs the 128MB
-    # default) packs the small per-file chunks into enough partitions
-    # to feed every core. On a real cluster with many ≥128MB files the
-    # default is correct — this override is bench-local, not engine
-    # policy.
-    spark = get_session(
-        app_name="dataextractor-spark-bench",
-        extra_conf={"spark.sql.files.maxPartitionBytes": "4194304"},
-    )
+    event_dir = scratch_dir("bench_eventlog_") if args.trace else None
+    spark = bench_session("dataextractor-spark-bench", event_dir)
     specs = load_all()
 
     t0 = time.perf_counter()
     sf_dir = restage_fixtures(spark, env_dir)
     restage_s = round(time.perf_counter() - t0, 3)
 
-    # warm the JVM/codegen path once outside timing
-    specs["flagship_pricing_summary"].fn(spark, sf_dir).write.mode(
-        "overwrite"
-    ).format("noop").save()
-
-    best: dict[str, float] = {}
-    for _rep in range(N_REPS):
-        for name in HEADLINE:
-            fn = specs[name].fn
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            dt = time.perf_counter() - t0
-            best[name] = min(best.get(name, float("inf")), dt)
-    timings = {name: round(best[name], 3) for name in HEADLINE}
+    runs = time_queries(spark, sf_dir, names, {"cur": Side(specs)},
+                        trace=args.trace)
+    if args.trace:
+        write_trace(spark, event_dir, runs, f"bench.py at {env_dir}")
+    timings = {name: round(runs["cur"][name].wall, 3) for name in names}
 
     total = round(sum(timings.values()), 3)
     # Per-query detail goes to a file + an EARLY line; the compact

@@ -21,6 +21,8 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from dataextractor_spark.session import SESSION_PINS
+
 #: Per-session memo of UNMATERIALIZED scan DataFrames, keyed
 #: (sf_dir, name, validate), plus the one-time session-conf pin. A
 #: DataFrame here is a plan, not data: every action against it still
@@ -196,25 +198,11 @@ def load_table(
     if cached is not None:
         return cached
     if not state.get("_confs_set"):
-        # Results must not depend on the caller's session timezone (the
-        # driver harness builds its own SparkSession): epoch math and
-        # date_format over LTZ timestamps read the session tz, so pin
-        # it. Once per session: load_table is the mandatory first
-        # touch of any data, and nothing in-repo unpins it after.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        # Same any-session reasoning for a known-pathological optimizer
-        # rule (SPARK-36715 family): InferFiltersFromGenerate
-        # synthesizes `size(arr) > 0` above explode, and predicate
-        # pushdown inlines the array-building expression into the scan
-        # filter with attribute references substituted — for nested
-        # higher-order-function pipelines (winnowing fingerprints) that
-        # re-evaluates inner arrays per lambda element, a measured 23x
-        # slowdown. explode() already emits nothing for empty arrays,
-        # so excluding the rule is safe.
-        spark.conf.set(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
+        # Results must not depend on the caller's session (the driver
+        # harness builds its own): apply the session pins, once per
+        # session. Nothing in-repo unpins them after.
+        for k, v in SESSION_PINS.items():
+            spark.conf.set(k, v)
         # events.ts nanos handling (see the events branch below) must
         # be on before the first events read; harmless for µs files.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

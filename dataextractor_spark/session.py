@@ -18,6 +18,29 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Conf pins that results depend on, applied by ``get_session`` and
+#: again by ``catalog.load_table`` (the external driver builds its own
+#: session, and load_table is the mandatory first touch of any data).
+#:
+#: - UTC timezone: epoch math and date_format over LTZ timestamps read
+#:   the session tz, so results must not depend on the caller's.
+#: - InferFiltersFromGenerate excluded (SPARK-36715 family): the rule
+#:   synthesizes `size(arr) > 0` above an explode; predicate pushdown
+#:   then inlines the array expression into the scan filter with every
+#:   attribute reference substituted by its defining expression. For
+#:   higher-order-function pipelines (transform over transform, e.g.
+#:   winnowing fingerprints) that substitution re-evaluates inner
+#:   arrays per lambda element — O(len^2+) per row, a measured 23x
+#:   slowdown at sf0.1. explode() already emits nothing for empty
+#:   arrays, so the inferred filter only ever saves the per-row empty
+#:   check; dropping the rule is strictly safe.
+SESSION_PINS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.optimizer.excludedRules": (
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    ),
+}
+
 
 def get_session(
     app_name: str = "dataextractor-spark",
@@ -47,29 +70,12 @@ def get_session(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # --- Python boundary: always Arrow-batched -------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # --- determinism ---------------------------------------------
-        .config("spark.sql.session.timeZone", "UTC")
-        # --- known-pathological rule (SPARK-36715 family) ------------
-        # InferFiltersFromGenerate synthesizes `size(arr) > 0` above an
-        # explode; predicate pushdown then inlines the array expression
-        # into the scan filter with every attribute reference
-        # substituted by its defining expression. For higher-order-
-        # function pipelines (transform over transform, e.g. winnowing
-        # fingerprints) that substitution re-evaluates inner arrays per
-        # lambda element — O(len^2+) per row, a measured 23x slowdown
-        # at sf0.1. explode() already emits nothing for empty arrays,
-        # so the inferred filter only ever saves the per-row empty
-        # check; dropping the rule is strictly safe.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
         # --- local-mode resources (ignored under a cluster manager) --
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**SESSION_PINS, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,16 +1,26 @@
-"""bench.py restage plumbing: the unsplit-table byte copy must handle
-both fixture layouts (plain single-file parquet and directory-style
+"""bench.py plumbing: the unsplit-table byte copy must handle both
+fixture layouts (plain single-file parquet and directory-style
 Spark-written tables) — the round-8 copyfile-only branch raised
-IsADirectoryError on the latter."""
+IsADirectoryError on the latter; the tracked record's provenance; and
+the `--only` / `--trace` flags of the one timing loop."""
 
 from __future__ import annotations
 
+import json
 import os
+import pathlib
+import subprocess
+import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
+import bench
 from bench import _copy_fixture
+from tests.conftest import SF_SMALL
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 
 def _tiny_table() -> pa.Table:
@@ -72,3 +82,46 @@ def test_bench_detail_record_provenance():
         f"record provenance commit {sha} is not an ancestor of HEAD: "
         f"{res.stderr.strip() or res.stdout.strip()}"
     )
+
+
+@pytest.mark.parametrize("mode", [[], ["--compare", "HEAD"]])
+def test_only_rejects_unknown_query_before_session(mode, monkeypatch, capsys):
+    """An unknown `--only` name fails argument parsing, naming the query,
+    in both modes — before any session (and so any JVM) is requested."""
+
+    def no_session(*a, **k):
+        raise AssertionError("a session was requested")
+
+    monkeypatch.setattr(bench, "get_session", no_session)
+    with pytest.raises(SystemExit) as exit_:
+        bench.main(mode + ["--only", "agg_rollup,no_such_query"])
+    assert exit_.value.code != 0
+    assert "no_such_query" in capsys.readouterr().err
+
+
+def test_trace_writes_layer_table():
+    """`--only A,B --trace` times just A and B and writes the per-query
+    layer table: both queries present, each with exec-phase jobs, and
+    the build and exec phases inside the measured wall."""
+    names = ["flagship_pricing_summary", "agg_rollup"]
+    out = ROOT / "BENCH_trace_local.json"
+    out.unlink(missing_ok=True)
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_SF_DIR": SF_SMALL,
+        "SPARK_GRAFT_CPUS": "2",
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    res = subprocess.run(
+        [sys.executable, "bench.py", "--only", ",".join(names), "--trace"],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert json.loads(res.stdout.splitlines()[-1])["n_queries"] == 2
+    rows = json.loads(out.read_text())["sides"]["cur"]
+    assert sorted(rows) == sorted(names)
+    for name, row in rows.items():
+        assert row["exec"]["jobs"] > 0, name
+        # each phase is rounded to 1 ms on its own
+        assert row["build_s"] + row["exec_s"] <= row["wall_s"] + 0.002, row
+        assert 0 <= row["driver_gap_s"] <= row["wall_s"], row

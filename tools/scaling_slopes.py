@@ -29,31 +29,34 @@ denser version of the same keys):
 Layout policy is held IDENTICAL across scales (bench.py's restage
 file counts, scaled ×m for split tables, embeddings kept single-file
 per the round-8 finding), so the slope measures the algorithm, not a
-layout change. Timing = min over --reps interleaved noop-sink runs on
-the bench session shape (4 MB maxPartitionBytes).
+layout change. Timing is bench.py's own loop on its session: min over
+--reps noop-sink runs, with the scales of one table as the loop's
+sides, so every query's scales interleave per rep.
 
 Output: one JSON line per query with per-step ratios and the
-least-squares slope of ln(t) vs ln(m); full detail written to
-SLOPES_local.json (gitignored) or SLOPES_r12.json with --record.
+least-squares slope of ln(t) vs ln(m); full detail written to the
+gitignored SLOPES_local.json. Shuffle partitions come from
+SPARK_GRAFT_SHUFFLE_PARTITIONS, as for every session.
 
-    python tools/scaling_slopes.py [--record] [--reps N] [--only q1,q2]
+    python tools/scaling_slopes.py [--reps N] [--only q1,q2] [--scales 1,2,4]
 """
 
 from __future__ import annotations
 
-import atexit
 import json
 import math
 import os
-import shutil
 import sys
-import tempfile
-import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from bench import (  # noqa: E402
+    _RESTAGE_FILES, Side, _copy_fixture, bench_session, scratch_dir,
+    time_queries,
+)
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -72,9 +75,6 @@ SCALES = {
     "documents": (1, 2, 4),
     "embeddings": (1, 2, 4, 8, 16),
 }
-
-#: bench.py's restage counts — layout parity with the benchmark
-_FILES = {"lineitem": 8, "documents": 8, "orders": 4, "events": 4}
 
 
 def _scaled_copy(df, table, i):
@@ -129,22 +129,18 @@ def build_scaled_dir(spark, table: str, m: int) -> str:
     copies) and every other table is byte-copied at base size."""
     from dataextractor_spark.catalog import TABLES, load_table
 
-    out = tempfile.mkdtemp(prefix=f"slope_{table}_{m}x_")
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    out = scratch_dir(f"slope_{table}_{m}x_")
     for t in TABLES:
         src = f"{BASE}/{t}.parquet"
         dst = f"{out}/{t}.parquet"
         if t != table:
-            if os.path.isdir(src):
-                shutil.copytree(src, dst)
-            else:
-                shutil.copyfile(src, dst)
+            _copy_fixture(src, dst)
             continue
         base_df = load_table(spark, BASE, t, validate=False)
         df = _scaled_copy(base_df, t, 0)
         for i in range(1, m):
             df = df.unionByName(_scaled_copy(base_df, t, i))
-        n_files = _FILES.get(t, 1) * m
+        n_files = _RESTAGE_FILES.get(t, 1) * m
         if n_files <= 1:
             df.coalesce(1).write.mode("overwrite").parquet(dst)
         else:
@@ -164,9 +160,7 @@ def fit_slope(ms, ts):
 
 def main() -> int:
     from dataextractor_spark.registry import load_all
-    from dataextractor_spark.session import get_session
 
-    record = "--record" in sys.argv[1:]
     reps = 2
     if "--reps" in sys.argv[1:]:
         reps = int(sys.argv[sys.argv.index("--reps") + 1])
@@ -180,16 +174,7 @@ def main() -> int:
         for t in SCALES:
             SCALES[t] = forced
 
-    shuffle_partitions = 32
-    if "--shuffle-partitions" in sys.argv[1:]:
-        shuffle_partitions = int(
-            sys.argv[sys.argv.index("--shuffle-partitions") + 1]
-        )
-    spark = get_session(
-        app_name="scaling-slopes",
-        shuffle_partitions=shuffle_partitions,
-        extra_conf={"spark.sql.files.maxPartitionBytes": "4194304"},
-    )
+    spark = bench_session("scaling-slopes")
     specs = load_all()
     targets = {
         q: t for q, t in TARGETS.items() if only is None or q in only
@@ -205,19 +190,13 @@ def main() -> int:
                 dirs[(t, m)] = build_scaled_dir(spark, t, m)
 
     best: dict[tuple[str, int], float] = {}
-    for rep in range(reps):
-        for q, t in targets.items():
-            for m in SCALES[t]:
-                fn = specs[q].fn
-                t0 = time.perf_counter()
-                fn(spark, dirs[(t, m)]).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                dt = time.perf_counter() - t0
-                best[(q, m)] = min(best.get((q, m), float("inf")), dt)
-                print(
-                    f"# rep{rep} {q} x{m}: {dt:.2f}s", file=sys.stderr
-                )
+    for t in dict.fromkeys(targets.values()):
+        names = [q for q, qt in targets.items() if qt == t]
+        sides = {m: Side(specs, sf_dir=dirs[(t, m)]) for m in SCALES[t]}
+        for m, runs in time_queries(spark, BASE, names, sides, reps).items():
+            for q, run in runs.items():
+                best[(q, m)] = run.wall
+                print(f"# {q} x{m}: {run.wall:.2f}s", file=sys.stderr)
 
     results = {}
     for q, t in targets.items():
@@ -246,10 +225,9 @@ def main() -> int:
         "method": "disjoint-replication weak scaling, min over reps",
         "results": results,
     }
-    name = "SLOPES_r12.json" if record else "SLOPES_local.json"
-    with open(os.path.join(ROOT, name), "w") as f:
+    with open(os.path.join(ROOT, "SLOPES_local.json"), "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
-    print(f"# wrote {name}", file=sys.stderr)
+    print("# wrote SLOPES_local.json", file=sys.stderr)
     return 0
 
 
