@@ -9,6 +9,12 @@ driver-side listing entry, a footer read, and a task-scheduling slot.
 Compaction rewrites each date-partition into few large files without
 changing a single row.
 
+`etl.pipeline.full_load` does not create this problem: it writes its
+partitioned datasets through a rebalance on the partition columns, so
+an overwrite lands about one file per partition value, not one per
+fetch partition and value. Compaction is for the paths that add files
+over time: appends and streaming sinks.
+
 Design for scale:
 - One shuffle, keyed by the partition columns plus a bounded salt,
   so each partition directory lands in exactly `files_per_partition`

@@ -20,7 +20,8 @@ import json
 from dataclasses import dataclass, field
 from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from dataextractor_spark.sources.rest import RestRequest, TransportFactory, fetch
 
@@ -81,6 +82,22 @@ def normalize_payloads(raw: DataFrame, spec: DatasetSpec) -> DataFrame:
     return parsed.select("rec.*")
 
 
+def _failed_requests(raw: DataFrame) -> tuple[int, list[str]]:
+    """(number of failed requests, up to 3 of their errors) of a
+    ``fetch`` result. The count is observed while one job passes over
+    ``raw``, which also fills its cache when ``raw`` is persisted. Only
+    when the count is non-zero does a second job take 3 errors, so the
+    driver never receives more than 3 failed rows."""
+    seen = Observation()
+    raw.observe(seen, F.count_if(F.col("status") != 200).alias("n")).write.format(
+        "noop"
+    ).mode("overwrite").save()
+    n = seen.get["n"]
+    if not n:
+        return 0, []
+    return n, [r.error for r in raw.filter(F.col("status") != 200).head(3)]
+
+
 def full_load(
     spark: SparkSession,
     datasets: Sequence[DatasetSpec],
@@ -95,6 +112,19 @@ def full_load(
     Parquet at ``{out_base}/{name}`` (fixed per-dataset location ≙ the
     reference's fixed S3 keys, extract-data-dota.py:131-199, so
     monthly reruns stay idempotent).
+
+    Each request is fetched exactly once. The fetch result is persisted
+    (MEMORY_AND_DISK, so a lost block is recomputed from lineage); one
+    job fills the cache and counts the failed requests, the write reads
+    the cache, and the cache is dropped as soon as the write ends or
+    fails. Any failed request fails the dataset before anything is
+    written, so a request never lands as a silent gap. The reported row
+    count is read back from the written files.
+
+    A dataset with ``partition_by`` is written through a rebalance on
+    those columns, so AQE sizes the output files and splits skewed keys:
+    a load writes about one file per partition value, not one per fetch
+    partition and value.
 
     Independent datasets are independent Spark ACTIONS, and Spark's
     scheduler accepts jobs from multiple driver threads — so
@@ -114,22 +144,26 @@ def full_load(
             spec.requests,
             transport_factory,
             rate_limit_per_partition=rate_limit_per_partition,
-        )
-        bad = raw.filter(F.col("status") != 200)
-        n_bad = bad.count()
-        if n_bad:
-            sample = [r.error for r in bad.select("error").head(3)]
-            raise RuntimeError(
-                f"{n_bad} failed requests for {spec.name!r}; e.g. {sample}"
-            )
-        df = normalize_payloads(raw, spec)
-        if spec.transform is not None:
-            df = spec.transform(df)
-        writer = df.write.mode("overwrite")
-        if spec.partition_by:
-            writer = writer.partitionBy(*spec.partition_by)
-        writer.parquet(f"{out_base}/{spec.name}")
-        return spark.read.parquet(f"{out_base}/{spec.name}").count()
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            n_bad, sample = _failed_requests(raw)
+            if n_bad:
+                raise RuntimeError(
+                    f"{n_bad} failed requests for {spec.name!r}; e.g. {sample}"
+                )
+            df = normalize_payloads(raw, spec)
+            if spec.transform is not None:
+                df = spec.transform(df)
+            writer = df.write
+            if spec.partition_by:
+                writer = df.hint("rebalance", *spec.partition_by).write.partitionBy(
+                    *spec.partition_by
+                )
+            writer.mode("overwrite").parquet(f"{out_base}/{spec.name}")
+        finally:
+            raw.unpersist()
+        # the schema is known: reading it from a footer would cost a job
+        return spark.read.schema(df.schema).parquet(f"{out_base}/{spec.name}").count()
 
     report = LoadReport()
     if max_concurrency <= 1:

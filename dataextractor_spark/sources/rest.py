@@ -4,10 +4,10 @@
 
 Differences from the reference, by design:
 - DISTRIBUTED: the reference fetches 13 endpoints sequentially on one
-  thread (extract-data-dota.py:126-199). Here the request list is a
-  DataFrame and fetching happens inside ``mapInPandas`` — every
-  executor core fetches its partition of requests concurrently, with a
-  per-partition session and token bucket. 10⁶ entity-detail lookups
+  thread (extract-data-dota.py:126-199). Here the request list is
+  sliced into partitions and every executor core fetches its
+  partition of requests concurrently, with a per-partition session
+  and token bucket. 10⁶ entity-detail lookups
   (A13's match_id getters) become an embarrassingly parallel scan.
 - BOUNDED retries: the reference recurses forever on HTTP 429
   (opendotaapi.py:79-82) and swallows errors to None (A23). We retry
@@ -265,58 +265,31 @@ def fetch(
 ) -> DataFrame:
     """Execute a batch of REST requests as a distributed scan.
 
-    The request list becomes a DataFrame repartitioned across
-    executors; each partition builds ONE transport (connection reuse ≙
-    the reference's Session) and one token bucket, then streams
-    results out as Arrow batches via mapInPandas. Result schema:
-    (endpoint, request_id, status, body, error, attempts) — callers
-    normalize `body` with etl.normalize / from_json.
-    """
-    import pandas as pd  # local import: driver + executors both have it
+    The request list is sliced straight into ``num_partitions`` input
+    partitions (default: one per request, at most 64), so the scan has
+    no shuffle. Each partition builds ONE transport (connection reuse ≙
+    the reference's Session) and one token bucket, and fetches its
+    requests in the same Python worker that hands the result rows to
+    Spark. That keeps the fetch to one Python stage: every Python stage
+    has a fixed cost per task, and that cost dominates a small fetch.
+    Result schema: (endpoint, request_id, status, body, error,
+    attempts) — callers normalize `body` with etl.normalize / from_json.
 
-    reqs = [
-        (r.endpoint, r.request_id, json.dumps(dict(r.params))) for r in requests_list
-    ]
+    The result is lazy: every action on it fetches again. A caller that
+    reads it more than once persists it first (see ``full_load``).
+    """
+    reqs = list(requests_list)
     if not reqs:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    src = spark.createDataFrame(
-        reqs, "endpoint string, request_id string, params_json string"
-    )
     n_parts = num_partitions or min(len(reqs), 64)
-    src = src.repartition(n_parts)
 
-    def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run_partition(part: Iterator[RestRequest]) -> Iterator[tuple]:
         transport = transport_factory()
         bucket = TokenBucket(rate=rate_limit_per_partition)
-        for pdf in batches:
-            rows = []
-            for endpoint, request_id, params_json in zip(
-                pdf["endpoint"], pdf["request_id"], pdf["params_json"]
-            ):
-                req = RestRequest(
-                    endpoint=endpoint,
-                    request_id=request_id,
-                    params=tuple(sorted(json.loads(params_json).items())),
-                )
-                rows.append(
-                    _fetch_one(
-                        transport,
-                        bucket,
-                        req,
-                        max_retries=max_retries,
-                        backoff_s=backoff_s,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "endpoint",
-                    "request_id",
-                    "status",
-                    "body",
-                    "error",
-                    "attempts",
-                ],
+        for req in part:
+            yield _fetch_one(
+                transport, bucket, req, max_retries=max_retries, backoff_s=backoff_s
             )
 
-    return src.mapInPandas(run_partition, RESULT_SCHEMA)
+    rows = spark.sparkContext.parallelize(reqs, n_parts).mapPartitions(run_partition)
+    return spark.createDataFrame(rows, RESULT_SCHEMA)

@@ -4,7 +4,9 @@ nothing touches a network (SURVEY.md §7 hard part d)."""
 from __future__ import annotations
 
 import json
+import os
 
+from dataextractor_spark.etl.compaction import compact, data_files
 from dataextractor_spark.etl.pipeline import (
     DatasetSpec,
     demo_match_payload,
@@ -12,12 +14,14 @@ from dataextractor_spark.etl.pipeline import (
     MATCH_SCHEMA,
     matches_transform,
 )
+from dataextractor_spark.plans.inspect import physical_plan
 from dataextractor_spark.sources.rest import (
     FixtureTransport,
     RestRequest,
     TokenBucket,
     _fetch_one,
     fetch,
+    page_requests,
 )
 
 
@@ -326,3 +330,113 @@ def test_full_load_concurrent_equals_sequential(spark, tmp_path):
             map(tuple, spark.read.parquet(f"{tmp_path}/conc/{name}").collect())
         )
         assert a == b, name
+
+
+def test_fetch_has_no_shuffle(spark):
+    """The request list is sliced straight into input partitions: no
+    Exchange in the plan, one partition per request by default, and
+    ``num_partitions`` still sets the count."""
+    reqs = page_requests("/items", 3)
+    fx = FixtureTransport({})
+    df = fetch(spark, reqs, lambda: fx)
+    assert "Exchange" not in physical_plan(df, "simple")
+    assert df.rdd.getNumPartitions() == 3
+    assert fetch(spark, reqs, lambda: fx, num_partitions=2).rdd.getNumPartitions() == 2
+
+
+class OnceOnlyPageTransport:
+    """Five records per ``?page=k``; page 1 answers 200 on its first call
+    and 404 on every later one. Each call appends its page to a log
+    opened with O_APPEND: the fetching Python workers are separate
+    processes, so the log is the only count they share."""
+
+    def __init__(self, log_path: str):
+        self.log_path = log_path
+
+    def __call__(self, url, params):
+        page = params["page"]
+        seen = []
+        if os.path.exists(self.log_path):
+            with open(self.log_path, encoding="utf-8") as f:
+                seen = f.read().split()
+        fd = os.open(self.log_path, os.O_WRONLY | os.O_APPEND | os.O_CREAT, 0o644)
+        try:
+            os.write(fd, f"{page}\n".encode())
+        finally:
+            os.close(fd)
+        if page == "1" and page in seen:
+            return 404, json.dumps({"error": "page 1 is gone"})
+        return 200, json.dumps([{"id": 10 * int(page) + i} for i in range(5)])
+
+
+def test_full_load_fetches_each_request_once(spark, tmp_path):
+    """The failure check and the write read one fetch. If the write
+    fetched again, page 1's second answer (404) would drop its rows
+    from the lake while the check had passed."""
+    log = str(tmp_path / "calls.log")
+    spec = DatasetSpec("pages", page_requests("/items", 3), "id BIGINT")
+    report = full_load(
+        spark, [spec], lambda: OnceOnlyPageTransport(log), str(tmp_path / "lake")
+    )
+    assert report.ok == {"pages": 15} and not report.failed
+    with open(log, encoding="utf-8") as f:
+        assert sorted(f.read().split()) == ["0", "1", "2"]
+    ids = sorted(r.id for r in spark.read.parquet(str(tmp_path / "lake" / "pages")).collect())
+    assert ids == [10 * p + i for p in range(3) for i in range(5)]
+
+
+def test_full_load_failure_report_is_bounded(spark, tmp_path):
+    """Many failed requests: the report counts them all and quotes at
+    most three errors."""
+    spec = DatasetSpec("broken", page_requests("/nope", 10), "id BIGINT")
+    report = full_load(
+        spark, [spec], lambda: FixtureTransport({}), str(tmp_path), raise_on_failure=False
+    )
+    msg = report.failed["broken"]
+    assert msg.startswith("RuntimeError: 10 failed requests for 'broken'; e.g. [")
+    sample = msg.split("e.g. ", 1)[1]
+    assert sample.count("http 404") == 3
+
+
+def _spread_pages(n_pages: int, per_page: int, days: int) -> dict:
+    """publicMatches pages whose records cover ``days`` São Paulo dates,
+    so every date gets rows from every page."""
+    fx = {}
+    for p in range(n_pages):
+        recs = json.loads(demo_match_payload(per_page, 1_750_000_000 + 3600 * p))
+        for i, rec in enumerate(recs):
+            rec["match_id"] += 100 * p
+            rec["start_time"] += 86_400 * (i % days) - 3600 * i
+        fx[f"/publicMatches?page={p}"] = (200, json.dumps(recs))
+    return fx
+
+
+def test_partitioned_full_load_writes_one_file_per_dt(spark, tmp_path):
+    """A dt-partitioned load of pages that each span several days writes
+    one data file per dt directory (not one per fetch partition and
+    day), and compacting that output leaves the row multiset unchanged.
+    Six pages, because with three a round-robin request shuffle can put
+    all of them in one fetch partition and hide the file fan-out."""
+    spec = DatasetSpec(
+        name="matches",
+        requests=page_requests("/publicMatches", 6),
+        schema=MATCH_SCHEMA,
+        transform=matches_transform,
+        partition_by=("dt",),
+    )
+    fx = FixtureTransport(_spread_pages(6, 8, 4))
+    report = full_load(spark, [spec], lambda: fx, str(tmp_path))
+    assert report.ok == {"matches": 48}
+    path = str(tmp_path / "matches")
+    dt_dirs = sorted(d for d in os.listdir(path) if d.startswith("dt="))
+    assert len(dt_dirs) == 4
+    for d in dt_dirs:
+        assert len(data_files(os.path.join(path, d))) == 1, d
+
+    def rows():
+        return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+    before = rows()
+    rep = compact(spark, path, ["dt"])
+    assert rep.files_before == rep.files_after == 4
+    assert rows() == before
