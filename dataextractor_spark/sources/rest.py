@@ -271,7 +271,9 @@ def fetch(
     the reference's Session) and one token bucket, and fetches its
     requests in the same Python worker that hands the result rows to
     Spark. That keeps the fetch to one Python stage: every Python stage
-    has a fixed cost per task, and that cost dominates a small fetch.
+    has a fixed cost per task (about 0.05 s from submit to function
+    entry on 4 cores, 0.2 s before ``pydaemon``), and that cost
+    dominates a small fetch.
     Result schema: (endpoint, request_id, status, body, error,
     attempts) — callers normalize `body` with etl.normalize / from_json.
 
