@@ -14,19 +14,8 @@ Design rules (SURVEY.md §4):
 - Python UDFs only where built-ins can't express the semantics, and
   then always Arrow-batched (pandas_udf / mapInPandas).
 
-Intermediate pinning (the repo-wide ``localCheckpoint(eager=False)``
-idiom): when one bounded intermediate feeds two or more consumers,
-Spark re-derives it per consumer, so operators pin it once via a lazy
-localCheckpoint. The trade-off, documented here once for every pin
-site: localCheckpoint truncates lineage to NON-REPLICATED executor
-storage, so losing an executor fails the query instead of recomputing
-it — free and correct on the single-JVM local[*] topology this repo
-benches on, but a fault-tolerance trade on a multi-node cluster.
-Cluster deployments that prefer recomputable lineage should swap the
-idiom for reliable ``checkpoint()`` (needs a checkpoint dir) or
-``persist(StorageLevel.MEMORY_AND_DISK_2)``; the pinned tables are
-all bounded (sub-corpus-sized by construction), so either alternative
-changes cost, not semantics.
+Shared intermediates are pinned through one storage policy,
+``dataextractor_spark.pins.pin``; its docstring holds the trade.
 """
 
 __version__ = "0.1.0"

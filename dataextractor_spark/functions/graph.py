@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from dataextractor_spark.pins import pin
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """Undirected edge set as (src > dst) rows, self-loops dropped,
@@ -77,7 +79,7 @@ def connected_components(
     # collect that immediately follows — one job per round instead of
     # two (eager checkpoint + collect), which halves the scheduling
     # overhead that dominates small/shrinking edge sets
-    e = _canonical(edges).localCheckpoint(eager=False)
+    e = pin(_canonical(edges))
     prev = _certificate(e)
     rounds = 0
     for rounds in range(1, max_rounds + 1):
@@ -105,7 +107,7 @@ def connected_components(
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
             .union(mins2.select("src", F.col("m").alias("dst")))
         )
-        e = _canonical(small).localCheckpoint(eager=False)
+        e = pin(_canonical(small))
 
         cert = _certificate(e)
         if cert == prev:

@@ -28,6 +28,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from dataextractor_spark.pins import pin
+
 
 def pagerank(
     edges: DataFrame, *, iterations: int = 3, damping: float = 0.85
@@ -47,10 +49,10 @@ def pagerank(
     # rounds — reliable checkpoint dir on a real cluster). Without it
     # the upstream lineage (e.g. a distinct over a fact scan) re-runs
     # ~3× per sweep.
-    edges = edges.localCheckpoint(eager=False)
+    edges = pin(edges)
     deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).alias("outdeg")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     n = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     # uniform start over the node set (= src set: symmetric callers)
     ranks = deg.crossJoin(F.broadcast(n)).select(

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from dataextractor_spark.functions.kmeans import _d2_sql, no_aqe
+from dataextractor_spark.pins import pin
 
 
 def pq_fit(
@@ -108,7 +109,7 @@ def _pq_fit_jobs(
             ).alias("e"),
         )
         .select("e.j", "e.sub")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     aggs = [
         F.avg(F.col("sub")[i].cast("double")).alias(f"m{i}")

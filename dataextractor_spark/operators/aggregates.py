@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dataextractor_spark.catalog import load_table
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
 
@@ -943,7 +944,7 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = (
         pos.groupBy("o_orderpriority", "month", "bkt")
         .agg(F.bitmap_construct_agg("bit").alias("bm"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # query-time rollups reuse the SAME pre-aggregated bitmaps:
     # month-level counts summed per priority would double-count; the
@@ -1091,7 +1092,9 @@ def agg_hll_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hll_sketch_agg("o_custkey", 14).alias("sk"),
             F.countDistinct("o_custkey").cast("long").alias("exact_n"),
         )
-        .localCheckpoint(eager=False)
+        # kept for values: unpinned, sf0.1 HLL estimates drift
+        # (est_a 11722 → 11720, est_intersection 9149 → 9170)
+        .transform(pin)
     )
     # the EXACT branch is estimate-free: it can (and does) run on one
     # distinct (yr, custkey) pass instead of two raw orders scans +
@@ -1285,7 +1288,7 @@ def agg_countmin_heavyhitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (
         li.groupBy("l_suppkey")
         .agg(F.count(F.lit(1)).alias("exact_n"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     seeds = F.explode(
         F.array(*[F.lit(s) for s in range(CM_D)])
@@ -1699,7 +1702,7 @@ def agg_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("y"),
         )
         .agg(F.count(F.lit(1)).alias("nxy"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     mx = joint.groupBy("x").agg(F.sum("nxy").alias("nx"))
     my = joint.groupBy("y").agg(F.sum("nxy").alias("ny"))

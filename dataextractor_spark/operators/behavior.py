@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from dataextractor_spark.catalog import load_table
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
 def _ord():
@@ -88,9 +89,9 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_view"))
         # each step feeds TWO consumers (the next step's gate join and
-        # its own funnel count); localCheckpoint pins the bounded
-        # per-user table to one computation instead of a fact rescan
-        .localCheckpoint(eager=False)
+        # its own funnel count); the pin keeps the bounded per-user
+        # table to one computation instead of a fact rescan
+        .transform(pin)
     )
     c = (
         e.filter(F.col("event_type") == "click")
@@ -98,7 +99,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("t_view"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_click"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     p = (
         e.filter(F.col("event_type") == "purchase")
@@ -106,7 +107,6 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("t_click"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_purchase"))
-        .localCheckpoint(eager=False)
     )
     nv = F.broadcast(v.agg(F.count(F.lit(1)).cast("long").alias("n_view")))
     nc = F.broadcast(c.agg(F.count(F.lit(1)).cast("long").alias("n_click")))
@@ -358,7 +358,7 @@ def time_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         seq.filter(F.col("prev").isNotNull())
         .groupBy("prev", "cur")
         .agg(F.count(F.lit(1)).cast("long").alias("n_trans"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = trans.groupBy("prev").agg(F.sum("n_trans").alias("n_from"))
     return (
@@ -449,7 +449,7 @@ def time_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("v")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     wd = F.weekday(F.col("day")).cast("long")
     wk = (
@@ -760,7 +760,7 @@ def time_lag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("y"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     lags = spark.range(8).select(F.col("id").cast("long").alias("lag"))
     a = daily.select(F.col("day").alias("d_a"), "x")
@@ -877,7 +877,7 @@ def attr_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.lit(100.0)
             ).alias("attributed_value"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     total = F.broadcast(
         grouped.agg(F.sum("n_purchases").cast("long").alias("n_total"))
@@ -1019,7 +1019,7 @@ def time_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("v")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a = daily.select("event_type", "day", F.col("v").alias("actual"))
     p = daily.select(
@@ -1114,7 +1114,7 @@ def agg_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("v")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     wk = daily.groupBy(
         "event_type", F.weekday(F.col("day")).cast("long").alias("wd")
@@ -1199,7 +1199,7 @@ def time_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     du = e.select(
         F.date_trunc("day", "ts").alias("day"), "user_id"
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct().transform(pin)
     firsts = du.groupBy("user_id").agg(F.min("day").alias("first_day"))
     daily = (
         du.join(firsts, "user_id")
@@ -1446,7 +1446,6 @@ def funnel_step_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_view"))
-        .localCheckpoint(eager=False)
     )
     c = (
         e.filter(F.col("event_type") == "click")
@@ -1457,7 +1456,7 @@ def funnel_step_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("t_view").alias("t_view"),
             F.min("ts").alias("t_click"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     p = (
         e.filter(F.col("event_type") == "purchase")
@@ -1590,7 +1589,7 @@ def attr_position_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).over(wj),
             F.lit(0),
         ).cast("long"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     buys = seq.filter(F.col("event_type") == "purchase").select(
         "user_id",
         "jid",
@@ -1630,7 +1629,7 @@ def attr_position_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("cents") * 1000).cast("long").alias("credit_u"),
         )
     )
-    credits = credited.unionByName(orphan).localCheckpoint(eager=False)
+    credits = credited.unionByName(orphan).transform(pin)
     total = credits.agg(F.sum("credit_u").cast("long").alias("tot"))
     return (
         credits.groupBy("channel")
@@ -1746,7 +1745,7 @@ def ab_funnel_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.max(t).alias("t"), F.min("ts").alias("t_view"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     c = (
         e.filter(F.col("event_type") == "click")
@@ -1754,7 +1753,7 @@ def ab_funnel_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("ts") > F.col("t_view"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_click"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     p = (
         e.filter(F.col("event_type") == "purchase")

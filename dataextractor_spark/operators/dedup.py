@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dataextractor_spark.catalog import load_table
 from dataextractor_spark.functions.graph import connected_components
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
 _N_PERM = 32  # MinHash permutations
@@ -170,7 +171,7 @@ def jaccard_pairs_from_tokens(
     postings+verify sides) would otherwise each re-scan and
     re-tokenize the corpus — compute the token arrays once, decide on
     them (guide §1.2 / the minhash signature-pin lesson)."""
-    tok = tok.localCheckpoint(eager=False)
+    tok = pin(tok)
     if strategy == "auto":
         n_max = tok.agg(F.max("n_toks")).collect()[0][0] or 0
         # max symmetric difference a Jaccard ≥ t pair can have:
@@ -540,7 +541,7 @@ def minhash_lsh_pairs(d: DataFrame, *, bucket_cap: int = LSH_BUCKET_CAP) -> Data
             "lang",
             F.array(*[F.col(f"h{i}") for i in range(_N_PERM)]).alias("sig"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     rows_per_band = _N_PERM // _BANDS
     bands = F.transform(
@@ -911,7 +912,7 @@ def dedup_span_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     rare = (
         sh.withColumn("freq", F.count(F.lit(1)).over(Window.partitionBy("h")))
         .filter(F.col("freq") <= 50)
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a = rare.select(
         F.col("doc_id").alias("doc_a"), F.col("pos").alias("pos_a"), "h"
@@ -1095,9 +1096,7 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     ).otherwise(F.array(F.concat_ws(" ", w)))
-    sh = d.select("doc_id", "lang", tri.alias("toks")).localCheckpoint(
-        eager=False
-    )
+    sh = d.select("doc_id", "lang", tri.alias("toks")).transform(pin)
     # lazy checkpoint: three consumers (df table, prefix ranking, the
     # b-side postings) each re-ran the shingle explode from the pinned
     # sh — three ~1.4 s single-stage jobs in the r12 profile, the
@@ -1105,7 +1104,7 @@ def dedup_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     post = sh.select(
         "doc_id", "lang", F.size("toks").alias("sz"),
         F.explode("toks").alias("tok"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     df_tab = post.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     rn = Window.partitionBy("doc_id").orderBy("df", "tok")
     prefix = (

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dataextractor_spark.catalog import load_table
 from dataextractor_spark.etl.normalize import flatten_array_column, unpivot_dict
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
 # The reference's constants dicts (opendotaapi.py:125-183) are {id: name}
@@ -1059,7 +1060,7 @@ def etl_partition_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (
         li.groupBy(F.date_trunc("month", "l_shipdate").alias("mon"))
         .agg(F.count(F.lit(1)).cast("long").alias("rows_"))
-        .localCheckpoint(eager=False)  # one scan: feeds the summary twice
+        .transform(pin)  # one scan: feeds the summary twice
     )
     totals = p.agg(
         F.count(F.lit(1)).cast("long").alias("np"),

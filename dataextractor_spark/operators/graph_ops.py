@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from dataextractor_spark.catalog import load_table
 from dataextractor_spark.functions.pagerank import pagerank
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
 _PR_ITER_SQL = """
@@ -189,7 +190,7 @@ def _orient_by_degree(pairs: DataFrame, deg: DataFrame) -> DataFrame:
             .alias("e")
         )
         .select("e.src", "e.dst", "e.ddst")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
 
 
@@ -410,7 +411,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         # join, and the edge count — without it the per-order
         # self-join + distinct re-executes for every consumer (the
         # pagerank/dedup pattern; see those modules)
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     return triangle_stats(pairs, _closing_join_hint(spark, sf_dir))
 
@@ -594,11 +595,9 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     seed = li.agg((F.min("l_suppkey") * 2).alias("node"))
-    visited = seed.withColumn("level", F.lit(0).cast("long")).localCheckpoint(
-        eager=False
-    )
+    visited = seed.withColumn("level", F.lit(0).cast("long")).transform(pin)
     frontier = visited.select("node")
     for k in range(1, 5):
         nxt = (
@@ -607,7 +606,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("level", F.lit(k).cast("long"))
-            .localCheckpoint(eager=False)
+            .transform(pin)
         )
         visited = visited.unionByName(nxt)
         frontier = nxt.select("node")
@@ -728,7 +727,7 @@ def lpa_labels(edges: DataFrame, sweeps: int = _LPA_SWEEPS) -> DataFrame:
     the sweep count, which is fine at the fixed 3-4 sweeps the
     declared queries use; a many-sweep caller should re-introduce a
     periodic pin."""
-    return _lpa_labels_plan(edges, sweeps).localCheckpoint(eager=False)
+    return _lpa_labels_plan(edges, sweeps).transform(pin)
 
 
 def _lpa_labels_plan(edges: DataFrame, sweeps: int = _LPA_SWEEPS) -> DataFrame:
@@ -813,7 +812,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         li.select("l_suppkey", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     fwd = pairs.select(
         (F.col("l_suppkey") * 2).alias("src"),
@@ -821,7 +820,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     labels = lpa_labels(edges)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
@@ -978,7 +977,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         li.select("l_suppkey", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     pdeg = pairs.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("long").alias("pd")
@@ -989,7 +988,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= _LP_R)
         .select("l_suppkey", "l_partkey")
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tdeg = kept.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("long").alias("td")
@@ -1107,7 +1106,7 @@ def graph_kcore_decomposition(
     edges = (
         li.select(F.col("l_suppkey").alias("src"), F.col("l_partkey").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     # r12: each sweep's (n_suppliers, n_parts, n_edges) report is read
     # off the two DEGREE TABLES the peel already derives — distinct-src
@@ -1143,7 +1142,7 @@ def graph_kcore_decomposition(
             cur = (
                 cur.join(ds.filter(F.col("d") >= _KCORE_K).select("src"), "src")
                 .join(dd.filter(F.col("d") >= _KCORE_K).select("dst"), "dst")
-                .localCheckpoint(eager=False)
+                .transform(pin)
             )
     out = stats[0]
     for s in stats[1:]:
@@ -1222,7 +1221,7 @@ def local_clustering_cc(
         .unionAll(pairs.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("d"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     oriented = _orient_by_degree(pairs, deg)
     w1 = oriented.select(
@@ -1325,7 +1324,7 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     cc = local_clustering_cc(pairs, _closing_join_hint(spark, sf_dir))
     return (
@@ -1421,7 +1420,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     deg = (
         pairs.select(F.col("u").alias("node"))
@@ -1549,7 +1548,7 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a1 = pairs.groupBy("p").agg(F.count(F.lit(1)).cast("long").alias("a"))
     h1 = (
@@ -1561,13 +1560,13 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.join(h1, "s")
         .groupBy("p")
         .agg(F.sum("h").cast("long").alias("a"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     h2 = (
         pairs.join(a2, "p")
         .groupBy("s")
         .agg(F.sum("a").cast("long").alias("h"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     amax = a2.agg(F.max("a").alias("m"))
     hmax = h2.agg(F.max("h").alias("m"))

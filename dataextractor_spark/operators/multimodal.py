@@ -36,6 +36,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dataextractor_spark.catalog import load_table
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
 #: metadata carried alongside every payload — the typed contract a
@@ -881,9 +882,7 @@ def multimodal_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # profile — the most expensive stage of the query); pinned, the
     # codec pass runs once (the minhash signature-pin recipe: compute
     # the sketch once, decide on the sketch)
-    hashes = dhash_images(encode_patterned_images(docs)).localCheckpoint(
-        eager=False
-    )
+    hashes = dhash_images(encode_patterned_images(docs)).transform(pin)
     bands = hashes.select(
         "doc_id",
         "phash",

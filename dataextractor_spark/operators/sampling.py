@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from dataextractor_spark.catalog import load_table
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
 
@@ -586,7 +587,7 @@ def profile_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("is_ref").cast("double").alias("ref_n"),
             F.sum(1 - F.col("is_ref")).cast("double").alias("cur_n"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = counts.agg(
         F.sum("ref_n").alias("ref_tot"), F.sum("cur_n").alias("cur_tot")
@@ -685,7 +686,7 @@ def agg_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("is_ref").cast("double").alias("ref_n"),
             F.sum(1 - F.col("is_ref")).cast("double").alias("cur_n"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     w = Window.orderBy("bucket").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
@@ -985,7 +986,7 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias(f"q{i}"),
         ]
-    s = o.agg(*aggs).localCheckpoint(eager=False)
+    s = o.agg(*aggs).transform(pin)
     d = lambda c: F.col(c).cast("double")  # noqa: E731
     sd = {
         i: F.sqrt(

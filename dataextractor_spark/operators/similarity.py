@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dataextractor_spark.catalog import load_table
 from dataextractor_spark.functions.vector import cosine_similarity
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
 #: fixed random hyperplanes for sign-LSH (seeded — deterministic across
@@ -754,7 +755,7 @@ def sim_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"element_at({_centroid_sql(coarse)}, cell + 1), "
             "(x, c) -> x - c)"
         ),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     # 2 sweeps per sub-fit: PQ sub-codebooks over residuals converge
     # fast (each is a 16-dim, 16-cell problem), and each extra sweep
     # is m more driver-scheduled jobs — measured 7.2 s -> ~5 s at
@@ -1352,7 +1353,6 @@ def sim_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 5,
             ).alias("ct"),
         )
-        .localCheckpoint(eager=False)
     )
     from pyspark.sql import Window
 
@@ -1488,7 +1488,7 @@ def sim_centroid_classify_eval(
             "transform(embedding,"
             " v -> cast(round(cast(v as double) * 1000000) as bigint))"
         ).alias("qv"),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     cent = (
         q.select("label", F.posexplode("qv").alias("pos", "val"))
         .groupBy("label", "pos")

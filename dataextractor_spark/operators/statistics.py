@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from dataextractor_spark.catalog import load_table
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
 def _cents():
@@ -76,7 +77,7 @@ def agg_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("y"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("nxy"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     mx = joint.groupBy("x").agg(F.sum("nxy").alias("nx"))
     my = joint.groupBy("y").agg(F.sum("nxy").alias("ny"))
@@ -417,7 +418,7 @@ def agg_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.datediff("max_d", "last_d").cast("long").alias("r_days"),
         "f_orders",
         "m_cents",
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     cuts = F.broadcast(
         rfm.agg(
             *[
@@ -1116,7 +1117,7 @@ def agg_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("status"),
         )
         .agg(F.sum(_cents()).alias("cents"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     parent = leaf.groupBy("prio").agg(F.sum("cents").alias("p_cents"))
     total = leaf.agg(F.sum("cents").alias("t_cents"))
@@ -1360,9 +1361,7 @@ def join_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair counts are hash aggregates; the n_orders scalar broadcasts;
     the final top-20 is TakeOrderedAndProject."""
     li = load_table(spark, sf_dir, "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct().localCheckpoint(
-        eager=False
-    )
+    items = li.select("l_orderkey", "l_partkey").distinct().transform(pin)
     n_orders = F.broadcast(
         items.agg(F.countDistinct("l_orderkey").cast("long").alias("n"))
     )
@@ -2589,9 +2588,9 @@ def theil_sen_trend_from_daily(daily: DataFrame) -> DataFrame:
     # global ranks are only coherent if every consumer reads the SAME
     # range shuffle (same sampled boundaries, same partition ids).
     # Exchange reuse usually guarantees that, but it is an optimizer
-    # choice — the lazy checkpoint makes the single materialization a
-    # plan property instead of a config dependency (same device as
-    # `daily` above and pq.py's `segs`).
+    # choice — the pin makes the single materialization a plan
+    # property instead of a config dependency (the caller pins `daily`
+    # and pq.py pins `segs` the same way).
     # r13 scale-knob sweep: the range fan-out follows the session conf
     # like the pair spread above (was a hardcoded 32). Global ranks =
     # offset + local row_number are partition-count-invariant, so the
@@ -2599,7 +2598,7 @@ def theil_sen_trend_from_daily(daily: DataFrame) -> DataFrame:
     parts = (
         slopes.repartitionByRange(p, "slope")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     counts = parts.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
     rhs = counts.select(
@@ -2680,7 +2679,7 @@ def agg_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     return theil_sen_trend_from_daily(daily)
 
@@ -2877,7 +2876,7 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("l_discount") * 100).cast("long").alias("y"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a = joint.select(
         F.col("x").alias("xa"), F.col("y").alias("ya"), F.col("c").alias("ca")
@@ -3011,7 +3010,7 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("v")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     wr = Window.orderBy("v", "day")
     ranked = daily.select(
@@ -3125,7 +3124,7 @@ def agg_chi2_cell_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("y"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("o"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     m = joint.select(
         "x",

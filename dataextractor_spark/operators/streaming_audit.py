@@ -61,6 +61,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from dataextractor_spark.catalog import load_table
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
 #: micro-batch width (seconds) of the deterministic replay model.
@@ -897,9 +898,7 @@ def _annotated(e: DataFrame) -> DataFrame:
     re-deriving it per consumer (the module's two-scan budget)."""
     arr = _with_arrival(e)
     wm = _batch_watermarks(arr).select("batch_id", "wm_late_ts")
-    return arr.join(F.broadcast(wm), "batch_id").localCheckpoint(
-        eager=False
-    )
+    return arr.join(F.broadcast(wm), "batch_id").transform(pin)
 
 
 def sessions_from(e: DataFrame) -> DataFrame:

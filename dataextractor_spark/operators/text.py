@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dataextractor_spark.catalog import load_table
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
 #: tiny per-language marker lexicons for the language-ID heuristic.
@@ -1266,7 +1267,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     lm = (
         ev.groupBy("tok", "nxt")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     bgc = lm.filter(F.col("nxt").isNotNull()).select(
         F.col("tok").alias("w1"),
@@ -1437,7 +1438,7 @@ def text_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = (
         d.select("source", F.explode(bigrams).alias("bg"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     sz = v.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n"))
     a = v.select(F.col("source").alias("source_a"), "bg")
@@ -1555,9 +1556,7 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = list(BM25_TERMS)
     # |postings(q)| rows only — consumed by both tf and df; checkpoint
     # so the corpus tokenize+filter runs once, not per consumer.
-    postings = toks.filter(F.col("t").isin(*q)).localCheckpoint(
-        eager=False
-    )
+    postings = toks.filter(F.col("t").isin(*q)).transform(pin)
     tf = postings.groupBy("doc_id", "t").agg(
         F.count(F.lit(1)).cast("double").alias("tf"),
         F.min("dl").alias("dl"),
@@ -1798,7 +1797,7 @@ def text_bigram_lm_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     lm = (
         ev.groupBy("tok", "nxt")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     big = lm.filter(valid).select(
         F.col("tok").alias("w1"),
@@ -2064,7 +2063,7 @@ def text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             % _DSIR_BUCKETS,
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     bs = tok.groupBy("b").agg(
         F.count(F.lit(1)).cast("long").alias("g"),
@@ -2215,7 +2214,7 @@ def text_quality_threshold_sweep(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("nw").cast("long").alias("toks"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = by_score.agg(
         F.sum("n").cast("long").alias("nt"),
@@ -2388,7 +2387,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.array(F.col("text")))
     sh = d.select(
         "doc_id", "source", F.explode(grams).alias("g")
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     per_source = sh.groupBy("source").agg(
         F.countDistinct("g").cast("long").alias("n_grams")
     )
@@ -2478,7 +2477,7 @@ def text_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = (
         d.select("source", F.explode(grams).alias("g"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     sizes = sh.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -2693,7 +2692,7 @@ def ml_calibration_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("c6").cast("long").alias("conf6"),
             F.sum("y").cast("long").alias("pos"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     tot = binned.agg(
         F.sum(F.abs(F.col("pos") * 1000000 - F.col("conf6")))
@@ -2784,7 +2783,7 @@ def text_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("bucket"),
             F.explode(F.split("text", " ")).alias("t"),
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     first_seen = toks.groupBy("t").agg(
         F.min("bucket").cast("long").alias("b")

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from dataextractor_spark.catalog import load_table
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
@@ -1113,7 +1114,7 @@ def time_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     coh = pm.groupBy("o_custkey").agg(F.min("m").alias("cohort_m"))
     cells = (
@@ -1232,7 +1233,7 @@ def time_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lines before the order date; day-positive spans only, or the
         # +1/-1 deltas would go negative before they open
         .filter(F.col("t1") > F.col("t0"))
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     delta = (
         spans.groupBy(F.date_trunc("day", "t0").alias("d"))
@@ -1425,7 +1426,7 @@ def time_interrupted_series(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("cents")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
 
     def seg(tag: str, cond):
@@ -1537,7 +1538,7 @@ def time_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("dollars")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     lags = F.broadcast(
         spark.range(1, _ACF_MAX_LAG + 1).select(F.col("id").alias("lag"))
@@ -1635,7 +1636,7 @@ def time_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("v")
         )
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     a = daily.select(F.col("d").alias("ad"), F.col("v").alias("av"))
     b = daily.select(F.col("d").alias("bd"), F.col("v").alias("bv"))

@@ -185,13 +185,15 @@ def lpa_kernel_golden_text(spark, sf_dir: str) -> str:
     from pyspark.sql import functions as F
 
     from dataextractor_spark.catalog import load_table
+    from dataextractor_spark.functions.kmeans import no_aqe
     from dataextractor_spark.operators.graph_ops import _lpa_labels_plan
+    from dataextractor_spark.pins import pin
 
     li = load_table(spark, sf_dir, "lineitem")
     pairs = (
         li.select("l_suppkey", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(pin)
     )
     fwd = pairs.select(
         (F.col("l_suppkey") * 2).alias("src"),
@@ -199,14 +201,9 @@ def lpa_kernel_golden_text(spark, sf_dir: str) -> str:
     )
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
-    conf = spark.conf
-    prev = conf.get("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    ).transform(pin)
+    with no_aqe(spark):
         return normalized_plan(_lpa_labels_plan(edges))
-    finally:
-        conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def assert_plan_parity(df_before: DataFrame, df_after: DataFrame) -> None:

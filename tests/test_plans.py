@@ -761,6 +761,30 @@ def test_driver_pulls_are_exactly_the_bounded_whitelist():
     assert got == DRIVER_PULL_SITES, got
 
 
+def test_every_pin_goes_through_pins_module():
+    """Static gate: the storage policy for shared intermediates lives
+    in ONE function, ``dataextractor_spark.pins.pin``. A
+    ``.localCheckpoint(`` call node anywhere else in the package, the
+    tests, bench.py or tools/ re-inlines that policy (docstring and
+    comment mentions are not call nodes and do not count)."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    files = [root / "bench.py"]
+    for d in ("dataextractor_spark", "tests", "tools"):
+        files += sorted((root / d).rglob("*.py"))
+    calls = [
+        (str(py.relative_to(root)), node.lineno)
+        for py in files
+        for node in ast.walk(ast.parse(py.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    ]
+    assert [f for f, _ in calls] == ["dataextractor_spark/pins.py"], calls
+
+
 #: The evidence epoch the current PRIORITY_ORDER rotation was derived
 #: from: CORRECTNESS_r{N}.json files with N > this are ignored by the
 #: rotation gate (they land AFTER the order was staged — typically the

@@ -21,6 +21,7 @@ from dataextractor_spark.etl.normalize import (
     normalize_json_records,
     unpivot_dict,
 )
+from dataextractor_spark.pins import pin
 
 _SETTINGS = dict(
     max_examples=15,
@@ -1063,7 +1064,7 @@ def test_triangle_stats_matches_bruteforce_enumeration(spark, raw):
         and (a, nodes[m]) in eset
     )
     df = spark.createDataFrame(edges, "u long, v long")
-    got = triangle_stats(df.localCheckpoint(eager=False)).collect()
+    got = triangle_stats(pin(df)).collect()
     assert len(got) == 1
     assert got[0].asDict() == {
         "n_nodes": len(nodes),
@@ -1319,7 +1320,7 @@ def test_lpa_labels_matches_synchronous_bruteforce(spark, raw):
     df = spark.createDataFrame(sym, "src long, dst long")
     got = {
         r.node: r.lbl
-        for r in lpa_labels(df.localCheckpoint(eager=False)).collect()
+        for r in lpa_labels(pin(df)).collect()
     }
     assert got == _lpa_bruteforce(edges)
 
@@ -1386,8 +1387,6 @@ def test_local_clustering_cc_matches_bruteforce(spark, raw):
     df = spark.createDataFrame(edges, "u long, v long")
     got = {
         r.node: (r.d, r.c8, r.cc_decile)
-        for r in local_clustering_cc(
-            df.localCheckpoint(eager=False)
-        ).collect()
+        for r in local_clustering_cc(pin(df)).collect()
     }
     assert got == want

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import load_all
 from dataextractor_spark.streaming import (
     events_stream,
@@ -454,7 +455,7 @@ def test_dedup_replay_audit_matches_streaming_engine(spark, tmp_path):
         .otherwise(
             F.when(dup_late, F.lit("late")).otherwise(F.lit("promoted"))
         ),
-    ).localCheckpoint(eager=False)
+    ).transform(pin)
     fates = {
         r.dup_cls: r.n
         for r in j.groupBy("dup_cls").agg(F.count(F.lit(1)).alias("n")).collect()
