@@ -601,18 +601,20 @@ def minhash_lsh_pairs(d: DataFrame, *, bucket_cap: int = LSH_BUCKET_CAP) -> Data
     # (a near-dup-rich corpus makes buckets large; hauling the 32-long
     # signatures through every duplicate banded pair dominated runtime
     # — ids-first then two hash joins back to signatures is ~3× faster
-    # at sf0.1 and shuffles 16 bytes/pair instead of ~540)
+    # at sf0.1 and shuffles 16 bytes/pair instead of ~540). The sides
+    # are aliased because both project one frame: `lhs.band ==
+    # rhs.band` would name a single attribute twice.
     lhs = gated.select(
         F.col("doc_id").alias("doc_a"), F.col("lang").alias("lang_a"), "band", "bhash"
-    )
+    ).alias("l")
     rhs = gated.select(
         F.col("doc_id").alias("doc_b"), F.col("lang").alias("lang_b"), "band", "bhash"
-    )
+    ).alias("r")
     cand_ids = (
         lhs.join(
             rhs,
-            (lhs.band == rhs.band)
-            & (lhs.bhash == rhs.bhash)
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bhash") == F.col("r.bhash"))
             & (F.col("lang_a") == F.col("lang_b"))
             & (F.col("doc_a") < F.col("doc_b")),
         )

@@ -20,6 +20,122 @@ from dataextractor_spark.functions.pagerank import pagerank
 from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 
+# --- shared frames: one builder each ----------------------------------
+
+
+def _incidence_arcs(pairs: DataFrame) -> DataFrame:
+    """Symmetric supplier↔part incidence arcs of the distinct
+    (l_suppkey, l_partkey) ``pairs``: one (src, dst) row per direction,
+    with LONG node ids supplier 2k and part 2k+1 — unique across the
+    two key spaces, node type recoverable by parity. Unpinned; each
+    caller pins what its own consumers share."""
+    fwd = pairs.select(
+        (F.col("l_suppkey") * 2).alias("src"),
+        (F.col("l_partkey") * 2 + 1).alias("dst"),
+    )
+    return fwd.unionByName(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
+def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Canonical within-order part co-purchase edge list: (u, v) with
+    u < v, one row per undirected edge (parts are adjacent when some
+    order contains both). Pinned: every caller reads it three or more
+    times (degrees, orientation or degree join, edge count), and the
+    per-order self-join + distinct would re-execute for each."""
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    a, b = li.alias("a"), li.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        )
+        .select(
+            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
+        )
+        .distinct()
+        .transform(pin)
+    )
+
+
+def _degrees(pairs: DataFrame) -> DataFrame:
+    """(node, d) degree table of a canonical u < v edge list."""
+    return (
+        pairs.select(F.col("u").alias("node"))
+        .unionAll(pairs.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).cast("long").alias("d"))
+    )
+
+
+def _closed_wedges(
+    pairs: DataFrame, deg: DataFrame, closing_hint: str
+) -> DataFrame:
+    """Every triangle of the canonical u < v edge list ``pairs`` (with
+    its ``deg`` table) exactly once, as a (src, x, y) row: an oriented
+    wedge x ← src → y kept by the closing semi-join on the edge x → y.
+
+    Degree-ordered orientation (Suri & Vassilvitskii, WWW'11) directs
+    every edge toward its higher-(degree, id) endpoint. Each triangle
+    then has exactly ONE apex ``src``, so wedges close at most once,
+    and out-degrees are O(√m), which caps the wedge join at
+    Σ outdeg² = O(m^1.5) instead of the Σ deg² a hub costs under an
+    arbitrary orientation. The oriented list is pinned: it feeds both
+    wedge sides and the closing side.
+
+    The closing join follows ``closing_hint``. Under ``shuffle_hash``
+    the m-row edge list builds and the Θ(m^1.5) wedges stream, with no
+    wedge-side sort; under sort-merge that sort spilled hundreds of
+    segment files per task on a 1 GiB heap and then OOMed in the spill
+    reader's per-file merge buffers. The hash build cannot spill at
+    all, which is why :func:`_closing_join_hint` sizes the choice."""
+    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
+    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
+    oriented = (
+        pairs.join(du, "u")
+        .join(dv, "v")
+        .select(
+            F.when(
+                (F.col("du") < F.col("dv"))
+                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
+                F.struct(
+                    F.col("u").alias("src"),
+                    F.col("v").alias("dst"),
+                    F.col("dv").alias("ddst"),
+                ),
+            )
+            .otherwise(
+                F.struct(
+                    F.col("v").alias("src"),
+                    F.col("u").alias("dst"),
+                    F.col("du").alias("ddst"),
+                )
+            )
+            .alias("e")
+        )
+        .select("e.src", "e.dst", "e.ddst")
+        .transform(pin)
+    )
+    w1 = oriented.select(
+        F.col("src"), F.col("dst").alias("x"), F.col("ddst").alias("dx")
+    )
+    w2 = oriented.select(
+        F.col("src"), F.col("dst").alias("y"), F.col("ddst").alias("dy")
+    )
+    wedges = (
+        w1.join(w2, "src")
+        .filter(
+            (F.col("dx") < F.col("dy"))
+            | ((F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y")))
+        )
+        .select("src", "x", "y")
+    )
+    closing = oriented.select(F.col("src").alias("x"), F.col("dst").alias("y"))
+    return wedges.join(closing.hint(closing_hint), ["x", "y"], "left_semi")
+
+
 _PR_ITER_SQL = """
         SELECT e.dst AS node,
                0.15 / (SELECT n_nodes FROM n)
@@ -84,24 +200,15 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys; AQE splits genuine skew), and the per-sweep state is one
     (node, rank) row per node — never adjacency on the driver.
 
-    r12 optimization (guide §2.3, narrower types): node ids are LONGS
-    (supplier 2k, part 2k+1 — the LPA encoding) instead of the
-    original 's<k>'/'p<k>' strings. The id only needs to (a) be
-    unique across the two key spaces and (b) recover the node type at
-    the end (parity); a string id shuffles ~2× the bytes per edge row
-    and pays string hashing/compares in every sweep's join+agg — the
-    r12 profile showed the three sweep stages as the query's hottest
-    single-task CPU. The oracle (unchanged, string ids) pins that the
-    reported summary is encoding-invariant."""
+    Node ids are the long incidence encoding of
+    :func:`_incidence_arcs` (supplier 2k, part 2k+1): the id only has
+    to be unique across the two key spaces and recover the node type
+    at the end (parity), and a string id would shuffle ~2× the bytes
+    per edge row and pay string hashing in every sweep's join+agg, the
+    sweeps being the query's hottest stages. The oracle keeps string
+    ids, which pins that the reported summary is encoding-invariant."""
     li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select("l_suppkey", "l_partkey").distinct()
-    fwd = pairs.select(
-        (F.col("l_suppkey") * 2).alias("src"),
-        (F.col("l_partkey") * 2 + 1).alias("dst"),
-    )
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = _incidence_arcs(li.select("l_suppkey", "l_partkey").distinct())
     ranks = pagerank(edges, iterations=3, damping=0.85)
     return (
         ranks.select(
@@ -155,45 +262,6 @@ FROM stats CROSS JOIN ec CROSS JOIN tri
 """
 
 
-def _orient_by_degree(pairs: DataFrame, deg: DataFrame) -> DataFrame:
-    """Degree-ordered orientation (Suri & Vassilvitskii, WWW'11):
-    direct every undirected edge (u, v) toward its higher-(degree, id)
-    endpoint, carrying the destination's degree. ``pairs`` is the
-    canonical u < v edge list; ``deg`` is (node, d). Returns
-    (src, dst, ddst), locally checkpointed because every caller
-    consumes it twice (wedge build + closing edge list). Shared by the
-    global triangle census (triangle_stats) and the per-node
-    clustering kernel (local_clustering_cc) — the orientation is the
-    part both proofs lean on: each triangle has exactly ONE apex under
-    it, so wedges close at most once."""
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    ranked = pairs.join(du, "u").join(dv, "v")
-    return (
-        ranked.select(
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.struct(
-                    F.col("u").alias("src"),
-                    F.col("v").alias("dst"),
-                    F.col("dv").alias("ddst"),
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    F.col("v").alias("src"),
-                    F.col("u").alias("dst"),
-                    F.col("du").alias("ddst"),
-                )
-            )
-            .alias("e")
-        )
-        .select("e.src", "e.dst", "e.ddst")
-        .transform(pin)
-    )
-
-
 #: estimated co-purchase edges per lineitem row. Measured on the
 #: fixture family: 1.37M canonical u<v edges from 600k lineitem rows
 #: at sf0.1 (×2.29), with the order-size distribution fixed by the
@@ -211,8 +279,8 @@ def _parquet_num_rows(sf_dir: str, table: str) -> int:
     """Exact row count of a staged parquet table from its footers —
     driver-side metadata only (pyarrow), no Spark job. Used by the
     closing-join sizing estimate below; a failure (exotic layout,
-    missing file) degrades to 0 rows, which selects the unspillable-
-    build-friendly small-graph path exactly like today's default."""
+    missing file) degrades to 0 rows, which selects the small-graph
+    hash build."""
     import glob
 
     import pyarrow.parquet as pq
@@ -229,26 +297,15 @@ def _parquet_num_rows(sf_dir: str, table: str) -> int:
         return 0
 
 
-def _mem_bytes(s: str) -> float:
-    m = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
-    s = s.strip().lower()
-    if s and s[-1] in m:
-        return float(s[:-1]) * m[s[-1]]
-    return float(s)
-
-
-def _closing_join_hint(spark=None, sf_dir: str | None = None) -> str:
-    """Join strategy for the triangle kernels' closing semi-join
-    (wedges ⋉ oriented edges), per ``SPARK_GRAFT_GRAPH_CLOSING_JOIN``:
-
-    - ``auto`` (default, r13 — VERDICT r12 item 1): derive the hint
-      from an ESTIMATED per-task build mass against the task slot's
-      execution-memory share. ShuffledHashJoin builds cannot spill
-      (SLOPES_r12: the forced shuffle_hash default OOMed building the
-      UnsafeHashedRelation at 16× data on one 8 GiB local[32] heap —
-      partition count cannot save it because every task slot builds
-      concurrently in the shared heap), so shuffle_hash is only
-      chosen while the estimate fits:
+def _closing_join_hint(spark: SparkSession, sf_dir: str) -> str:
+    """Join strategy for the triangle kernels' closing semi-join over
+    the lineitem table at ``sf_dir``: ``shuffle_hash`` while the
+    ESTIMATED per-task hash build fits the task slot's
+    execution-memory share, ``merge`` otherwise. A ShuffledHashJoin
+    build cannot spill: at 16× sf0.1 on one 8 GiB local[32] heap the
+    UnsafeHashedRelation build OOMed (SLOPES_r12.json), and more
+    partitions cannot save it because every task slot builds at once
+    in the shared heap. So:
 
         est_task_build = rows(lineitem) · 3 edges/row · 64 B/edge
                            ÷ shuffle partitions
@@ -257,92 +314,61 @@ def _closing_join_hint(spark=None, sf_dir: str | None = None) -> str:
                          its slot with the streamed wedge batches and
                          the rest of the stage pipeline)
 
-      Row counts come from the parquet footers (driver-side pyarrow
-      metadata — no job); heap/slots come from the executor confs on
-      a cluster and the driver confs under local[*]. At sf0.1 /
-      local[32] / 8g the estimate is ~3.7 MB vs a ~38 MB budget →
-      shuffle_hash (the measured-fastest local shape, unchanged);
-      at the 16× weak-scaling probe it is ~59 MB → merge, which
-      spills and completes where the old default died.
-    - ``shuffle_hash`` / ``merge``: explicit overrides, unchanged.
+    Row counts come from the parquet footers (driver-side metadata —
+    no job); heap and slots come from the executor confs on a cluster
+    and the driver confs under local[*], with the memory string read
+    by Spark's own parser (``8g``, ``8gb``, ``8192m`` and a bare
+    ``8192``, which Spark reads as MiB, are all 8 GiB). At sf0.1 /
+    local[32] / 8g the estimate is ~3.7 MB against a ~38 MB budget →
+    shuffle_hash; at 16× it is ~59 MB → merge, which spills and
+    completes. Sort-merge pays the wedge-side sort the hash build
+    avoids, 2.2–2.6× the wall of the hash plan at sf0.1, so it is
+    taken only when the hash build would not provably fit.
 
-    Sort-merge costs the wedge-side sort the hash build avoids, which
-    is exactly the price of spillability — the auto rule pays it only
-    when the unspillable build would not provably fit.
-    """
-    v = os.environ.get("SPARK_GRAFT_GRAPH_CLOSING_JOIN", "auto")
-    if v not in ("auto", "shuffle_hash", "merge"):
-        raise ValueError(
-            "SPARK_GRAFT_GRAPH_CLOSING_JOIN must be 'auto', "
-            f"'shuffle_hash' or 'merge', got {v!r}"
-        )
-    if v != "auto":
-        return v
-    if spark is None or sf_dir is None:
-        # kernel driven directly (property tests, ad-hoc frames): tiny
-        # inputs by contract — the hash build is the right shape.
-        return "shuffle_hash"
+    AQE cannot make this choice instead. Without a hint the planner
+    picks sort-merge, and AQE converts it to a ShuffledHashJoin at
+    runtime only when ``maxShuffledHashJoinLocalMapThreshold`` is at
+    least ``advisoryPartitionSizeInBytes`` (64 MB) and every partition
+    is under the threshold. It judges partition bytes: the closing
+    side's exchange is 11.7 MB over 32 partitions at sf0.1 and about
+    6 MB per partition at 16×, far under any threshold AQE accepts,
+    so it would choose the unspillable hash build in exactly the 16×
+    case that OOMed. The heap share per task slot is the one input
+    this estimate has and AQE lacks."""
     rows = _parquet_num_rows(sf_dir, "lineitem")
     parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     sc = spark.sparkContext
+    conf = sc.getConf()
     if sc.master.startswith("local"):
-        heap = _mem_bytes(sc.getConf().get("spark.driver.memory", "1g"))
-        slots = sc.defaultParallelism
+        mem, slots = conf.get("spark.driver.memory", "1g"), sc.defaultParallelism
     else:
-        heap = _mem_bytes(sc.getConf().get("spark.executor.memory", "1g"))
-        slots = int(sc.getConf().get("spark.executor.cores", "1"))
+        mem = conf.get("spark.executor.memory", "1g")
+        slots = int(conf.get("spark.executor.cores", "1"))
+    java_utils = sc._jvm.org.apache.spark.network.util.JavaUtils
+    heap = java_utils.byteStringAsMb(mem) * 2**20
     est_task_build = rows * _EDGES_PER_ROW * _BUILD_BYTES_PER_EDGE / max(parts, 1)
     budget = 0.6 * heap / max(slots, 1) / 4.0
     return "shuffle_hash" if est_task_build <= budget else "merge"
 
 
-def triangle_stats(pairs: DataFrame, closing_hint: str | None = None) -> DataFrame:
+def triangle_stats(pairs: DataFrame, closing_hint: str = "shuffle_hash") -> DataFrame:
     """Exact triangle/wedge census of an undirected graph given its
     canonical edge list: ``pairs`` must be (u, v) with u < v, distinct
-    (one row per undirected edge), ideally checkpointed by the caller
-    since it is consumed three times. Returns one row: n_nodes,
-    n_edges, n_wedges, n_triangles, clustering_coeff.
+    (one row per undirected edge), ideally pinned by the caller since
+    it is consumed three times. Returns one row: n_nodes, n_edges,
+    n_wedges, n_triangles, clustering_coeff.
 
-    This is the degree-ordered-orientation kernel documented on
-    graph_triangle_count (which supplies the co-purchase edge list);
-    factored out so the randomized oracle in tests/test_properties.py
-    can drive it with arbitrary small graphs against brute-force
-    enumeration."""
-    deg = (
-        pairs.select(F.col("u").alias("node"))
-        .unionAll(pairs.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
+    n_triangles counts the closed oriented wedges of
+    :func:`_closed_wedges`, one per triangle; n_wedges counts every
+    unoriented wedge, Σ d(d−1)/2 over the degree table. The closing
+    join takes ``closing_hint``; the hash default suits the small
+    graphs the randomized oracle in tests/test_properties.py drives
+    against brute-force enumeration, and graph_triangle_count sizes it
+    from its table."""
+    deg = _degrees(pairs)
+    tri = _closed_wedges(pairs, deg, closing_hint).agg(
+        F.count(F.lit(1)).alias("n_triangles")
     )
-    oriented = _orient_by_degree(pairs, deg)
-    w1 = oriented.select(
-        F.col("src"), F.col("dst").alias("x"), F.col("ddst").alias("dx")
-    )
-    w2 = oriented.select(
-        F.col("src"), F.col("dst").alias("y"), F.col("ddst").alias("dy")
-    )
-    wedges = w1.join(w2, "src").filter(
-        (F.col("dx") < F.col("dy"))
-        | ((F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y")))
-    ).select("x", "y")
-    closing = oriented.select(
-        F.col("src").alias("x"), F.col("dst").alias("y")
-    )
-    # SHUFFLE_HASH, not sort-merge: build side is the m-row edge list
-    # (tiny per partition), stream side is the Θ(m^1.5) wedge set —
-    # hashing edges and STREAMING wedges is the canonical MapReduce
-    # triangle-counting shape, and it removes the wedge-side sort
-    # entirely. Under SMJ that sort spilled hundreds of segment files
-    # per task on a 1 GiB heap (AQE coalesces the wedge exchange to
-    # ~64 MB partitions) and then OOMed in UnsafeSorterSpillReader's
-    # per-file merge buffers; with the hash build there is nothing to
-    # sort and the same query runs at sf0.1 in <20 s on a vanilla
-    # default-heap session.
-    tri = wedges.join(
-        closing.hint(closing_hint or _closing_join_hint()),
-        ["x", "y"],
-        "left_semi",
-    ).agg(F.count(F.lit(1)).alias("n_triangles"))
     stats = deg.agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"),
         F.sum(F.col("d") * (F.col("d") - 1)).cast("long").alias("wedges2"),
@@ -371,15 +397,13 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from baskets).
 
     The Spark plan uses DEGREE-ORDERED ORIENTATION (Suri &
-    Vassilvitskii, WWW'11 MapReduce triangle counting): every
-    undirected edge is directed toward the endpoint with the higher
-    (degree, id) rank, so each triangle {a,b,c} with rank a<b<c is
-    found exactly once as wedge a→b, a→c closed by edge b→c — and the
-    out-degree of every node is bounded by O(√m), which caps the
-    wedge-join blowup at Σ outdeg² = O(m^1.5) instead of the Σ deg²
-    a hub would cost under arbitrary orientation. The wedge join and
-    the closing semi-join are both edge-keyed hash shuffles; degrees
-    come from one node-keyed aggregate; nothing is ever collected.
+    Vassilvitskii, WWW'11 MapReduce triangle counting; see
+    :func:`_closed_wedges`): each triangle is found exactly once, as
+    the one wedge at its lowest-rank corner closed by the edge between
+    the other two, and the wedge join is bounded by O(m^1.5). The
+    wedge join and the closing semi-join are both edge-keyed hash
+    shuffles; degrees come from one node-keyed aggregate; nothing is
+    ever collected.
 
     The oracle counts the same triangles directly off the canonical
     u<v edge list (a<b,b<c,a<c 3-way join) — orientation-invariance
@@ -388,32 +412,15 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Resource envelope: this co-purchase graph is DENSE (avg degree
     ~100), so the oriented wedge set is ~20M rows at sf0.1. The
-    closing check is a SHUFFLE_HASH left-semi join (note in
-    triangle_stats, which implements the census over the edge list):
-    edges build, wedges stream, no wedge-side sort — which is what
-    lets the same plan finish at sf0.1 in under 20 s even on a
-    vanilla default-1-GiB-heap session. The wedge volume itself is
-    the Θ(m^1.5) lower bound any exact counter pays.
+    closing semi-join hashes edges and streams wedges, with no
+    wedge-side sort, while :func:`_closing_join_hint` estimates that
+    the build fits, and falls back to the spillable sort-merge at
+    sizes where it would not. The wedge volume itself is the
+    Θ(m^1.5) lower bound any exact counter pays.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        # lazy checkpoint: the edge set feeds deg, the orientation
-        # join, and the edge count — without it the per-order
-        # self-join + distinct re-executes for every consumer (the
-        # pagerank/dedup pattern; see those modules)
-        .transform(pin)
+    return triangle_stats(
+        _copurchase_pairs(spark, sf_dir), _closing_join_hint(spark, sf_dir)
     )
-    return triangle_stats(pairs, _closing_join_hint(spark, sf_dir))
 
 
 @query(
@@ -576,25 +583,17 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     and per-sweep state is one row per reached node, never adjacency
     on the driver.
 
-    r12 optimizations: (a) node ids are LONGS (supplier 2k, part
-    2k+1) instead of 's<k>'/'p<k>' strings — guide §2.3 narrower
-    types; every sweep's edges⋈frontier join and the anti-join hash
-    and shuffle an 8-byte key instead of a variable-width string, and
-    the level counts are integer-exact so the result is
-    encoding-invariant by construction. (b) only each sweep's NEW
-    frontier is checkpointed — ``visited`` is a union of already-
-    pinned frontiers, so its own checkpoint added a materialization
-    job per sweep for lineage that is one union-node deep (the r12
-    profile showed a ~3 s driver/scheduling gap across 21 jobs;
-    dropping the redundant pins removes 4 of them)."""
+    Node ids are the long incidence encoding (supplier 2k, part
+    2k+1), so every sweep's edges⋈frontier join and anti-join hash and
+    shuffle an 8-byte key instead of a variable-width string; the level
+    counts are integer-exact, so the result is encoding-invariant by
+    construction. Only each sweep's NEW frontier is pinned: ``visited``
+    is a union of already-pinned frontiers, one union node deep, and a
+    pin of its own would add a materialization job per sweep for no
+    lineage saved."""
     li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select("l_suppkey", "l_partkey").distinct()
-    fwd = pairs.select(
-        (F.col("l_suppkey") * 2).alias("src"),
-        (F.col("l_partkey") * 2 + 1).alias("dst"),
-    )
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    edges = _incidence_arcs(
+        li.select("l_suppkey", "l_partkey").distinct()
     ).transform(pin)
     seed = li.agg((F.min("l_suppkey") * 2).alias("node"))
     visited = seed.withColumn("level", F.lit(0).cast("long")).transform(pin)
@@ -803,24 +802,15 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: each sweep is one edges-with-labels hash join + two
     hash aggregates (per-(node,label) vote count, per-node argmax) —
     the same join+agg sweep shape as pagerank/BFS; labels are one row
-    per node, votes at most one row per (edge endpoint, label);
-    ``localCheckpoint(eager=False)`` per sweep caps lineage. Fixed
-    sweep count = fixed job count, no driver-side convergence loop.
+    per node, votes at most one row per (edge endpoint, label); the
+    sweeps share one edge exchange and only the final labels are
+    pinned (see :func:`lpa_labels`). Fixed sweep count = fixed job
+    count, no driver-side convergence loop.
     cf. reference README.md:28 (per-entity rollups) for the family.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        li.select("l_suppkey", "l_partkey")
-        .distinct()
-        .transform(pin)
-    )
-    fwd = pairs.select(
-        (F.col("l_suppkey") * 2).alias("src"),
-        (F.col("l_partkey") * 2 + 1).alias("dst"),
-    )
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).transform(pin)
+    pairs = li.select("l_suppkey", "l_partkey").distinct().transform(pin)
+    edges = _incidence_arcs(pairs).transform(pin)
     labels = lpa_labels(edges)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
@@ -1199,58 +1189,29 @@ ORDER BY cc_decile
 
 
 def local_clustering_cc(
-    pairs: DataFrame, closing_hint: str | None = None
+    pairs: DataFrame, closing_hint: str = "shuffle_hash"
 ) -> DataFrame:
     """Per-node local clustering coefficient of an undirected graph
     given its canonical edge list: ``pairs`` must be (u, v) with
-    u < v, distinct (one row per undirected edge), ideally
-    checkpointed by the caller since it is consumed three times.
-    Returns one row per node of degree ≥2: (node, d, c8, cc_decile)
-    where c8 is the 8-dp fixed-point BIGINT quantization of
-    2·t/(d(d−1)) and cc_decile = min(9, floor(20t / d(d−1))) — both
-    pure integer arithmetic, see the inline comment at the fixed-point
-    select.
+    u < v, distinct (one row per undirected edge), ideally pinned by
+    the caller since it is consumed three times. Returns one row per
+    node of degree ≥2: (node, d, c8, cc_decile) where c8 is the 8-dp
+    fixed-point BIGINT quantization of 2·t/(d(d−1)) and cc_decile =
+    min(9, floor(20t / d(d−1))) — both pure integer arithmetic, see
+    the inline comment at the fixed-point select.
 
-    This is the degree-ordered-orientation apex-credit kernel
-    documented on graph_local_clustering (which supplies the
-    co-purchase edge list); factored out so the randomized oracle in
-    tests/test_properties.py can drive it with arbitrary small graphs
-    against brute-force per-node triangle enumeration."""
-    deg = (
-        pairs.select(F.col("u").alias("node"))
-        .unionAll(pairs.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-        .transform(pin)
-    )
-    oriented = _orient_by_degree(pairs, deg)
-    w1 = oriented.select(
-        F.col("src"), F.col("dst").alias("x"), F.col("ddst").alias("dx")
-    )
-    w2 = oriented.select(
-        F.col("src"), F.col("dst").alias("y"), F.col("ddst").alias("dy")
-    )
-    wedges = (
-        w1.join(w2, "src")
-        .filter(
-            (F.col("dx") < F.col("dy"))
-            | ((F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y")))
-        )
-        .select("src", "x", "y")
-    )
-    closing = oriented.select(
-        F.col("src").alias("x"), F.col("dst").alias("y")
-    )
-    # keep src through the semi-join so the apex gets triangle credit
+    t counts the node's triangles: every closed wedge (src, x, y) of
+    :func:`_closed_wedges` is one triangle and credits all three
+    corners. The degree table is pinned because the orientation and
+    the output both read it. The closing join takes ``closing_hint``;
+    the hash default suits the small graphs the randomized oracle in
+    tests/test_properties.py drives against brute-force per-node
+    enumeration, and graph_local_clustering sizes it from its
+    table."""
+    deg = _degrees(pairs).transform(pin)
     tri_corners = (
-        wedges.join(
-            closing.hint(closing_hint or _closing_join_hint()),
-            ["x", "y"],
-            "left_semi",
-        )
-        .select(
-            F.explode(F.array("src", "x", "y")).alias("node")
-        )
+        _closed_wedges(pairs, deg, closing_hint)
+        .select(F.explode(F.array("src", "x", "y")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("t"))
     )
@@ -1295,11 +1256,11 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalogs from clique-y ones, where graph_triangle_count's single
     GLOBAL coefficient cannot.
 
-    Reuses the degree-ordered-orientation wedge machinery of
-    graph_triangle_count (Suri-Vassilvitskii; Θ(m^1.5) wedge volume,
-    SHUFFLE_HASH closing join) but keeps the wedge APEX through the
-    closing semi-join, so every found triangle {src,x,y} credits all
-    three corners via one explode + node-keyed count. cc_i =
+    Shares graph_triangle_count's closed oriented wedges
+    (:func:`_closed_wedges`: Θ(m^1.5) wedge volume, closing join sized
+    by :func:`_closing_join_hint`), which keep the wedge APEX, so
+    every found triangle {src,x,y} credits all three corners via one
+    explode + node-keyed count. cc_i =
     2·t_i / (d_i(d_i−1)) is exact (integer triangle counts over
     integer degree pairs); nodes of degree <2 are excluded (the
     coefficient is undefined). The decile mean is computed from an
@@ -1310,23 +1271,9 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recounts per-corner triangles off the canonical u<v
     list, proving orientation-invariance node-by-node, not just in
     total."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
+    cc = local_clustering_cc(
+        _copurchase_pairs(spark, sf_dir), _closing_join_hint(spark, sf_dir)
     )
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        .transform(pin)
-    )
-    cc = local_clustering_cc(pairs, _closing_join_hint(spark, sf_dir))
     return (
         cc.groupBy("cc_decile")
         .agg(
@@ -1406,28 +1353,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     build (the triangle-count edge derivation), one node-keyed degree
     aggregate, ONE edge-sized degree join + per-v partial agg, one
     node-sized join, one scalar row — no wedges, no iteration."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-    a, b = li.alias("a"), li.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        .transform(pin)
-    )
-    deg = (
-        pairs.select(F.col("u").alias("node"))
-        .unionAll(pairs.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
+    pairs = _copurchase_pairs(spark, sf_dir)
+    deg = _degrees(pairs)
     # one edge-sized join (u-side degree), then per-v integer partials:
     # the doubled-list sums regroup exactly as
     #   m2  = 2·Σ_v cnt_v          sj  = Σ_v (s1_v + dv·cnt_v)

@@ -58,32 +58,6 @@ def test_golden_plan_matches(spark, name):
             f"and justify it in the commit message.\n{diff}")
 
 
-def test_triangle_closing_join_merge_fallback(spark, monkeypatch):
-    """The round-12 weak-scaling finding (SLOPES_r12.json): the
-    triangle kernels' no-spill SHUFFLE_HASH closing build OOMs once
-    per-task build mass outgrows the heap, and the documented remedy
-    is yielding to sort-merge (which spills). That remedy is now a
-    knob — SPARK_GRAFT_GRAPH_CLOSING_JOIN=merge — and this test pins
-    all three contracts: the default plan keeps the hash build (also
-    golden-pinned), the fallback really flips BOTH kernels' closing
-    semi-join to SortMergeJoin, and an invalid value refuses loudly
-    rather than silently hashing."""
-    specs = load_all()
-    for name in ("graph_triangle_count", "graph_local_clustering"):
-        dflt = normalized_plan(specs[name].fn(spark, SF_SMALL))
-        assert "ShuffledHashJoin" in dflt and "LeftSemi" in dflt, name
-
-        monkeypatch.setenv("SPARK_GRAFT_GRAPH_CLOSING_JOIN", "merge")
-        merged = normalized_plan(specs[name].fn(spark, SF_SMALL))
-        monkeypatch.delenv("SPARK_GRAFT_GRAPH_CLOSING_JOIN")
-        assert "SortMergeJoin LeftSemi" in merged, name
-        assert "ShuffledHashJoin" not in merged, name
-
-    monkeypatch.setenv("SPARK_GRAFT_GRAPH_CLOSING_JOIN", "bogus")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_GRAPH_CLOSING_JOIN"):
-        specs["graph_triangle_count"].fn(spark, SF_SMALL)
-
-
 def test_lpa_sweep_kernel_golden(spark):
     """r13 (VERDICT r12 item 3/5): the LPA sweep-sharing claim — one
     up-front edges exchange, every sweep's join reusing it — is now a
@@ -116,30 +90,60 @@ def test_lpa_sweep_kernel_golden(spark):
 
 
 def test_triangle_closing_join_auto_sizing(spark, monkeypatch):
-    """r13 (VERDICT r12 item 1): the default closing-join mode is
-    'auto' — per-task build mass estimated from the parquet footer row
-    count against the task slot's execution-memory share. Pins all
-    four contracts: every local fixture SF estimates under budget and
-    keeps the measured-fastest hash build; a row count at the
-    SLOPES_r12 16x-OOM scale flips BOTH kernels' plans to the
-    spillable SortMergeJoin with NO env knob set; the kernel driven
-    without a table (property tests) keeps the small-graph hash
-    default; and an unreadable table degrades to the hash default
-    rather than raising."""
+    """The closing-join strategy is picked by code only: the per-task
+    build mass estimated from the parquet footer row count against the
+    task slot's execution-memory share. Pins four contracts: at fixture
+    size both kernels keep the measured-fastest hash build; a row count
+    at the SLOPES_r12 16x-OOM scale flips BOTH kernels' plans to the
+    spillable SortMergeJoin; a kernel driven without a table (property
+    tests) keeps the hash build through its parameter default; and an
+    unreadable table degrades to the hash build rather than raising."""
     from dataextractor_spark.operators import graph_ops as G
 
-    monkeypatch.delenv("SPARK_GRAFT_GRAPH_CLOSING_JOIN", raising=False)
+    specs = load_all()
+    kernels = ("graph_triangle_count", "graph_local_clustering")
     assert G._closing_join_hint(spark, SF_SMALL) == "shuffle_hash"
-    assert G._closing_join_hint() == "shuffle_hash"
     assert G._closing_join_hint(spark, "/nonexistent") == "shuffle_hash"
+    for name in kernels:
+        plan = normalized_plan(specs[name].fn(spark, SF_SMALL))
+        assert "ShuffledHashJoin LeftSemi" in plan, name
+        assert "SortMergeJoin LeftSemi" not in plan, name
+
+    pairs = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "u long, v long")
+    for kernel in (G.triangle_stats, G.local_clustering_cc):
+        plan = normalized_plan(kernel(pairs))
+        assert "ShuffledHashJoin LeftSemi" in plan, kernel.__name__
 
     # 16x the sf0.1 row count on this session's heap/slots must cross
     # the budget (57.6 MB est vs 38.4 MB at 8g/32 slots; any smaller
     # test session only shrinks the budget further).
     monkeypatch.setattr(G, "_parquet_num_rows", lambda sf, t: 16 * 600_000)
     assert G._closing_join_hint(spark, SF_SMALL) == "merge"
-    specs = load_all()
-    for name in ("graph_triangle_count", "graph_local_clustering"):
+    for name in kernels:
         plan = normalized_plan(specs[name].fn(spark, SF_SMALL))
         assert "SortMergeJoin LeftSemi" in plan, name
         assert "ShuffledHashJoin" not in plan, name
+
+
+@pytest.mark.parametrize("mem", ["8g", "8gb", "8192", "8192m"])
+def test_closing_join_reads_memory_strings_like_spark(spark, monkeypatch, mem):
+    """Every spelling Spark accepts for an 8 GiB heap sizes the closing
+    join as 8 GiB: half the rows that fill that budget keep the hash
+    build, twice as many flip to sort-merge. A bare number is MiB to
+    Spark; reading it as bytes would collapse the budget to sort-merge
+    at every size, and a ``gb`` suffix must not raise."""
+    from dataextractor_spark.operators import graph_ops as G
+
+    sc = spark.sparkContext
+    conf = sc.getConf().set("spark.driver.memory", mem)
+    monkeypatch.setattr(sc, "getConf", lambda: conf)
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    budget = 0.6 * 8 * 2**30 / sc.defaultParallelism / 4.0
+    rows_at_budget = int(
+        budget * parts / (G._EDGES_PER_ROW * G._BUILD_BYTES_PER_EDGE)
+    )
+
+    monkeypatch.setattr(G, "_parquet_num_rows", lambda sf, t: rows_at_budget // 2)
+    assert G._closing_join_hint(spark, SF_SMALL) == "shuffle_hash"
+    monkeypatch.setattr(G, "_parquet_num_rows", lambda sf, t: rows_at_budget * 2)
+    assert G._closing_join_hint(spark, SF_SMALL) == "merge"

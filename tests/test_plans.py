@@ -785,6 +785,29 @@ def test_every_pin_goes_through_pins_module():
     assert [f for f, _ in calls] == ["dataextractor_spark/pins.py"], calls
 
 
+def test_operators_read_no_environment():
+    """Static gate: a query's plan is decided by code and the session,
+    never by an environment variable the caller may not know is set.
+    No ``os.environ`` / ``os.getenv`` read may appear under
+    ``operators/`` or ``functions/``; deployment settings belong to
+    ``session.py`` and ``catalog.py``, which this census leaves out."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "dataextractor_spark"
+    reads = [
+        (str(py.relative_to(pkg)), node.lineno)
+        for d in ("operators", "functions")
+        for py in sorted((pkg / d).rglob("*.py"))
+        for node in ast.walk(ast.parse(py.read_text()))
+        if isinstance(node, ast.Attribute)
+        and node.attr in ("environ", "getenv")
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "os"
+    ]
+    assert reads == [], reads
+
+
 #: The evidence epoch the current PRIORITY_ORDER rotation was derived
 #: from: CORRECTNESS_r{N}.json files with N > this are ignored by the
 #: rotation gate (they land AFTER the order was staged — typically the
