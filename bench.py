@@ -14,6 +14,8 @@ through the one loop in `time_queries`.
     python bench.py --compare SHA     # paired cur/base ratios vs commit SHA
     python bench.py --only q1,q2      # a subset of the headline (any mode)
     python bench.py --trace           # also write the per-query layer table
+    python bench.py --scale M         # the fixture as M disjoint copies
+                                      #   (any mode but --record)
 """
 
 from __future__ import annotations
@@ -253,47 +255,9 @@ HEADLINE = [
 N_REPS = 3
 
 
-#: per-table restage file counts, re-tuned round 8 by three A/B
-#: sweeps at sf0.1 (min-of-3 interleaved probes; every entry was also
-#: tested against the single-file layout per the r7 verdict):
-#:   documents 32→8: the r7 layout's main regression — 32 files of
-#:     ~18 KB over a 5k-row table meant 32 tasks per sub-second text/
-#:     dedup stage; 8 halves text_entropy_kl (1.52→0.96 s), text_pmi_
-#:     bigrams (1.46→0.99), multimodal_phash_neardup (2.55→1.66),
-#:     text_token_stats (1.32→0.80) while KEEPING the original
-#:     restage wins (text_ngram_novelty 2.05 s vs 4.14 unrestaged;
-#:     gif codec ~1.0 vs 4.97). doc4 measured a wash vs doc8.
-#:   lineitem 32→8: heavy-probe totals 35.6 (16 files) / 33.1 (8) /
-#:     39.9 (single-file) — 8 tasks still parallelize the graph/join
-#:     stage-1 scans (graph_label_propagation 6.6→5.9, triangle
-#:     4.2→3.8) while the sub-second lineitem aggregates stop paying
-#:     16-task scheduling (agg_rollup 0.56→0.46, zorder 1.05→0.81).
-#:   orders/events 8→4: tiny-query probe 23.6 (8) / 21.6 (4) / 26.9
-#:     (single-file — heavy orders queries collapse: bootstrap_ci
-#:     2.6→3.8, permutation_test 2.3→4.3). 4 keeps those parallel and
-#:     trims funnel/attribution/sessionization ~15%.
-#: Unlisted tables stay single-file on purpose — splitting the 2k-row
-#: embeddings table regressed the multi-job ANN sweeps (ivf/k-means/
-#: semantic-dedup, +1-3 s each). Same lesson as production file
-#: sizing: target partition ROW counts, don't split indiscriminately.
-_RESTAGE_FILES = {
-    "lineitem": 8,
-    "documents": 8,
-    "orders": 4,
-    "events": 4,
-}
-
-
-def _copy_fixture(src: str, dst: str) -> None:
-    """Byte-copy one fixture table, handling both layouts: a plain
-    single-file parquet (the driver's fixtures) and a directory-style
-    Spark-written table (part files + _SUCCESS)."""
-    import shutil
-
-    if os.path.isdir(src):
-        shutil.copytree(src, dst)
-    else:
-        shutil.copyfile(src, dst)
+#: seed of `datagen.replicate`'s per-copy parameters under ``--scale``,
+#: fixed so every run at one scale reads the same rows
+SCALE_SEED = 0
 
 
 def scratch_dir(prefix: str) -> str:
@@ -308,49 +272,39 @@ def scratch_dir(prefix: str) -> str:
     return out
 
 
-def restage_fixtures(spark, sf_dir: str) -> str:
-    """Rewrite the fixture tables into an n-file-per-table layout.
+def stage_fixture(sf_dir: str, scale: int) -> str:
+    """Stage the catalog tables of ``sf_dir`` in the benchmarked layout,
+    replicated ``scale``-fold, and return the staged directory.
 
-    Every driver fixture is ONE parquet file with ONE row group
-    (verified with pyarrow), and Spark's scan splits cannot divide a
-    row group — so no matter what ``maxPartitionBytes`` says, stage 1
-    of every query (scan → project → explode → partial aggregate, the
-    map-side half of the whole engine) was executing on a single core.
-    A production deployment never looks like this: at any real scale a
-    table is thousands of files/row groups and stage-1 parallelism is
-    automatic; the repo even ships the layout-management operators
-    (etl_compaction_binpack, etl_zorder_layout) whose whole point is
-    file sizing. Restaging is the bench applying that same layout
-    hygiene once, up front, out-of-band of the per-query timings —
-    and it is reported in the output (``restage_s``), not hidden.
-    Row contents are identical (same multiset; every registered query
-    is order-insensitive by the registry convention)."""
-    from dataextractor_spark.catalog import TABLES, load_table
+    Every driver fixture is ONE parquet file with ONE row group, and
+    Spark's scan splits cannot divide a row group, so stage 1 of every
+    query (scan, project, partial aggregate) would run on one core.
+    Staging writes the big tables as contiguous row slices, the layout
+    `olap_sf01` measures (`datagen.write_catalog`). ``scale`` m makes m
+    disjoint copies of every table but region and nation
+    (`datagen.replicate`; copy 0 is the input, so m=1 keeps the rows)
+    and multiplies the part-file counts by m. Only pyarrow reads and
+    writes: no Spark job runs, and the time is reported as
+    ``restage_s``. Row contents at m=1 are the same multiset; every
+    registered query is order-insensitive by the registry convention."""
+    import pyarrow.parquet as pq
 
-    out = scratch_dir("bench_restage_")
-    for t in TABLES:
-        n = _RESTAGE_FILES.get(t, 1)
-        if n <= 1:
-            # deliberately-unsplit tables need no Spark rewrite — a
-            # byte copy is the identical single-file layout (queries
-            # re-read through load_table either way, so any read-side
-            # normalization applies identically); this keeps restage_s
-            # to the tables whose layout actually changes. Provenance
-            # note: rounds ≤7 restaged these tables through a Spark
-            # rewrite (repartition(1)), whose writer/compression can
-            # differ from the fixture's — so unsplit-table timings
-            # before/after round 8 carry a small layout delta.
-            _copy_fixture(f"{sf_dir}/{t}.parquet", f"{out}/{t}.parquet")
-            continue
-        df = load_table(spark, sf_dir, t, validate=False)
-        df.repartition(n).write.mode("overwrite").parquet(
-            f"{out}/{t}.parquet"
-        )
+    from dataextractor_spark.catalog import TABLES
+    from perfbench import datagen
+
+    base = {t: pq.read_table(os.path.join(sf_dir, f"{t}.parquet"))
+            for t in TABLES}
+    out = scratch_dir("bench_stage_")
+    # part files per table: datagen.RESTAGE_FILES, tuned in round 8 at
+    # sf0.1 (heavy-probe total 33.1 s at 8 lineitem files, 35.6 s at 16,
+    # 39.9 s at one)
+    datagen.write_catalog(datagen.replicate(base, scale, SCALE_SEED), out,
+                          files_scale=scale)
     return out
 
 
 def bench_session(app_name: str, event_dir: str | None = None):
-    """The session every bench mode times on. With the restaged
+    """The session every bench mode times on. With the staged
     multi-file layout, a 4MB split (vs the 128MB default) packs the
     small per-file chunks into enough partitions to feed every core. On
     a real cluster with many ≥128MB files the default is correct — this
@@ -369,13 +323,12 @@ def bench_session(app_name: str, event_dir: str | None = None):
 
 
 class Side(NamedTuple):
-    """One version of the code to time: its registry specs, the package
-    modules to swap into sys.modules around each run (None keeps the
-    current ones), and a data directory overriding the loop's."""
+    """One version of the code to time: its registry specs and the
+    package modules to swap into sys.modules around each run (None
+    keeps the current ones)."""
 
     specs: dict
     mods: dict | None = None
-    sf_dir: str | None = None
 
 
 class Run(NamedTuple):
@@ -396,7 +349,7 @@ def _run(spark, side: Side, sf_dir: str, name: str, group=None) -> Run:
     if group:
         sc.setJobGroup(f"{group}|build", name)
     t0 = time.perf_counter()
-    df = side.specs[name].fn(spark, side.sf_dir or sf_dir)
+    df = side.specs[name].fn(spark, sf_dir)
     t1 = time.perf_counter()
     if group:
         sc.setJobGroup(f"{group}|exec", name)
@@ -416,9 +369,13 @@ def time_queries(
     per QUERY the sides rotate which runs first: the first run of a
     query shape pays JIT/codegen warm-up, and a fixed first side absorbs
     all of it (measured: identical code showed median 1.26 at reps=1
-    with cur always first). Rotation cancels the bias in the median even
-    at reps=1; min-over-reps kills it entirely at reps>=2. With
-    ``trace`` every run's jobs are tagged ``side|name|rep|phase``."""
+    with cur always first). Rotation balances only when ``reps`` is a
+    multiple of the side count: at 3 reps and 2 sides one side leads a
+    query twice, and the other's min draws on two runs straight after
+    an identical plan (measured A/A on 4 cores: every one of 7 heavy
+    queries read cur/base 1.02-1.36× higher at the positions where cur
+    led twice). With ``trace`` every run's jobs are tagged
+    ``side|name|rep|phase``."""
     labels = list(sides)
     for label in labels:
         _run(spark, sides[label], sf_dir, "flagship_pricing_summary")
@@ -524,15 +481,17 @@ def _load_base_side(base_root: str):
     return specs, base_mods
 
 
-def run_compare(base_sha: str, names, trace: bool = False) -> None:
+def run_compare(args, names, env_dir: str, sf_dir: str) -> None:
     """Paired code-to-code control: bench HEAD's working tree against
-    ``base_sha`` in ONE Spark session, interleaved per query.
+    commit ``args.compare`` in ONE Spark session, interleaved per query,
+    both sides reading the one staged ``sf_dir``.
 
     This codifies the /tmp-clone control of rounds 9–11 (r11 verdict
     item 4). The host's quantified ±18% noise inflates whole time
     windows uniformly, so adjacent same-query pairs on byte-identical
-    inputs cancel it; cross-round totals never can. Per rep the two
-    sides alternate which goes first, killing cache-warming order bias.
+    inputs cancel it; cross-round totals never can. The two sides
+    alternate which goes first over an even number of reps, so each
+    leads every query equally often.
     Reports the paired per-query ratio (cur/base, min over reps each
     side), the total ratio, and the MEDIAN ratio — the statistic the
     r10/r11 noise analysis established as the decision variable.
@@ -543,6 +502,7 @@ def run_compare(base_sha: str, names, trace: bool = False) -> None:
     import subprocess
     import tempfile
 
+    base_sha, trace = args.compare, args.trace
     here = os.path.dirname(os.path.abspath(__file__))
     wt = tempfile.mkdtemp(prefix="bench_cmp_")
     subprocess.run(
@@ -560,15 +520,12 @@ def run_compare(base_sha: str, names, trace: bool = False) -> None:
 
         event_dir = scratch_dir("bench_eventlog_") if trace else None
         spark = bench_session("dataextractor-spark-bench-compare", event_dir)
-        env_dir = os.environ.get(
-            "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-        )
-        sf_dir = restage_fixtures(spark, env_dir)
-        runs = time_queries(spark, sf_dir, names, sides, trace=trace)
+        reps = N_REPS + N_REPS % 2
+        runs = time_queries(spark, sf_dir, names, sides, reps, trace)
         _swap_in(sides["cur"].mods)
         if trace:
-            write_trace(spark, event_dir, runs,
-                        f"bench.py --compare {base_sha} at {env_dir}")
+            write_trace(spark, event_dir, runs, f"bench.py --compare "
+                        f"{base_sha} --scale {args.scale} at {env_dir}")
         best = {
             s: {n: r.wall for n, r in per.items()} for s, per in runs.items()
         }
@@ -586,7 +543,8 @@ def run_compare(base_sha: str, names, trace: bool = False) -> None:
             "base": {n: round(best["base"][n], 3) for n in names},
             "ratios": ratios,
             "skipped_not_in_base": skipped,
-            "reps": N_REPS,
+            "reps": reps,
+            "scale": args.scale,
         }
         with open(os.path.join(here, "BENCH_compare_local.json"), "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
@@ -624,7 +582,11 @@ def _parse_args(argv):
     ap.add_argument("--trace", action="store_true",
                     help="write the per-query layer table to "
                          "BENCH_trace_local.json")
+    ap.add_argument("--scale", metavar="M", type=int, default=1,
+                    help="replicate the fixture into M disjoint copies")
     args = ap.parse_args(argv)
+    if args.scale < 1:
+        ap.error("--scale: M must be an integer >= 1")
     names = HEADLINE
     if args.only is not None:
         keep = {s.strip() for s in args.only.split(",") if s.strip()}
@@ -633,16 +595,15 @@ def _parse_args(argv):
             ap.error("--only: not a headline query: "
                      + (", ".join(unknown) or repr(args.only)))
         names = [n for n in HEADLINE if n in keep]
-    if args.record and (args.compare or args.only or args.trace):
-        ap.error("--record writes the full-headline record; run it alone")
+    if args.record and (args.compare or args.only or args.trace
+                        or args.scale != 1):
+        ap.error("--record writes the full-headline record at scale 1; "
+                 "run it alone")
     return args, names
 
 
 def main(argv=None) -> None:
     args, names = _parse_args(argv)
-    if args.compare:
-        run_compare(args.compare, names, args.trace)
-        return
     # The tracked BENCH_detail.json is a cross-round RECORD the judge
     # diffs; driver and smoke runs must not clobber it (round-9 verdict:
     # the driver's run overwrote the committed builder record in the
@@ -650,21 +611,22 @@ def main(argv=None) -> None:
     # tracked path; every other run writes the gitignored *_local file.
     record = args.record
     env_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    t0 = time.perf_counter()
+    sf_dir = stage_fixture(env_dir, args.scale)
+    restage_s = round(time.perf_counter() - t0, 3)
+    if args.compare:
+        run_compare(args, names, env_dir, sf_dir)
+        return
     m = re.search(r"sf([0-9.]+)", env_dir)
     sf = float(m.group(1)) if m else -1.0
 
     event_dir = scratch_dir("bench_eventlog_") if args.trace else None
     spark = bench_session("dataextractor-spark-bench", event_dir)
-    specs = load_all()
-
-    t0 = time.perf_counter()
-    sf_dir = restage_fixtures(spark, env_dir)
-    restage_s = round(time.perf_counter() - t0, 3)
-
-    runs = time_queries(spark, sf_dir, names, {"cur": Side(specs)},
+    runs = time_queries(spark, sf_dir, names, {"cur": Side(load_all())},
                         trace=args.trace)
     if args.trace:
-        write_trace(spark, event_dir, runs, f"bench.py at {env_dir}")
+        write_trace(spark, event_dir, runs,
+                    f"bench.py --scale {args.scale} at {env_dir}")
     timings = {name: round(runs["cur"][name].wall, 3) for name in names}
 
     total = round(sum(timings.values()), 3)
@@ -690,6 +652,7 @@ def main(argv=None) -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "scale": args.scale,
         "restage_s": restage_s,
         # which run produced this file (verdict r9 hygiene item): the
         # tracked record only ever comes from an explicit --record run.

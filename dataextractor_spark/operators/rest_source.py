@@ -75,7 +75,7 @@ def _values_sql() -> str:
 @query("rest_publicmatches_pipeline", oracle=_values_sql())
 def rest_publicmatches_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 end-to-end on the distributed REST source: fixture transport
-    → mapInPandas fetch → explicit-schema JSON normalize → array
+    → mapPartitions fetch → explicit-schema JSON normalize → array
     flatten (A5/A6) → epoch→São Paulo (A7) → date key (A8)."""
     transport = FixtureTransport(
         {"/publicMatches": (200, demo_match_payload(_N_MATCHES, _BASE_TS))}

@@ -58,7 +58,8 @@ def get_session(
     """Build (or reuse) a SparkSession with scale-oriented defaults.
 
     Parameters are env-overridable so the same entrypoints serve tests
-    (small local), bench (local[32] @ sf0.1), and a real cluster.
+    (small local), bench (local[$SPARK_GRAFT_CPUS] @ sf0.1), and a real
+    cluster.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")

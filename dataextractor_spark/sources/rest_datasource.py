@@ -6,9 +6,9 @@ the REST source. Spark 4's Python DataSource API is exactly that
 surface for PySpark: the engine plans the scan (one input partition
 per endpoint here, so fetch parallelism = endpoint count), executors
 run ``read(partition)``, and downstream transforms/filter pushdown
-compose like any other relation — versus the mapInPandas form in
-sources/rest.py (kept: it handles request-list DataFrames of ANY size,
-e.g. 10⁶ match-id lookups, where partitions are request batches
+compose like any other relation — versus the one-stage mapPartitions
+fetch in sources/rest.py (kept: it handles request lists of ANY size,
+e.g. 10⁶ match-id lookups, where partitions are request slices
 rather than endpoints).
 
 Determinism: the transport is the same FixtureTransport the rest of

@@ -1,8 +1,8 @@
-"""bench.py plumbing: the unsplit-table byte copy must handle both
-fixture layouts (plain single-file parquet and directory-style
-Spark-written tables) — the round-8 copyfile-only branch raised
-IsADirectoryError on the latter; the tracked record's provenance; and
-the `--only` / `--trace` flags of the one timing loop."""
+"""bench.py plumbing: fixture staging (both fixture layouts, plain
+single-file parquet and directory-style Spark-written tables, where
+the round-8 copyfile-only branch raised IsADirectoryError; and the
+``--scale`` replication), the tracked record's provenance, and the
+flags of the one timing loop."""
 
 from __future__ import annotations
 
@@ -11,44 +11,55 @@ import os
 import pathlib
 import subprocess
 import sys
+from collections import Counter
 
-import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 import bench
-from bench import _copy_fixture
+from dataextractor_spark.catalog import TABLES
+from perfbench.datagen import RESTAGE_FILES, SHARED
 from tests.conftest import SF_SMALL
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 
 
-def _tiny_table() -> pa.Table:
-    return pa.table({"k": [1, 2, 3], "v": ["a", "b", "c"]})
-
-
-def test_copy_fixture_plain_file(tmp_path):
-    src = str(tmp_path / "t.parquet")
-    dst = str(tmp_path / "out" / "t.parquet")
-    os.makedirs(tmp_path / "out")
-    pq.write_table(_tiny_table(), src)
-    _copy_fixture(src, dst)
-    assert pq.read_table(dst).equals(_tiny_table())
-
-
-def test_copy_fixture_directory_layout(tmp_path):
-    # a Spark-written table: a directory of part files plus _SUCCESS
-    src = tmp_path / "t.parquet"
-    src.mkdir()
-    pq.write_table(_tiny_table(), str(src / "part-00000.parquet"))
-    (src / "_SUCCESS").touch()
-    dst = str(tmp_path / "out" / "t.parquet")
-    os.makedirs(tmp_path / "out")
-    _copy_fixture(str(src), dst)
-    assert os.path.isdir(dst) and os.path.exists(os.path.join(dst, "_SUCCESS"))
-    assert pq.read_table(os.path.join(dst, "part-00000.parquet")).equals(
-        _tiny_table()
+def _rows(path: str) -> Counter:
+    """A table's row multiset, list cells made hashable."""
+    return Counter(
+        tuple(tuple(v) if isinstance(v, list) else v for v in row.values())
+        for row in pq.read_table(path).to_pylist()
     )
+
+
+@pytest.mark.parametrize("scale", [1, 2])
+@pytest.mark.parametrize("layout", ["plain_file", "spark_dir"])
+def test_stage_fixture(layout, scale, tmp_path):
+    src = SF_SMALL
+    if layout == "spark_dir":
+        # every table as a Spark-written directory: part file + _SUCCESS
+        src = str(tmp_path / "fixture")
+        for t in TABLES:
+            d = pathlib.Path(src, f"{t}.parquet")
+            d.mkdir(parents=True)
+            pq.write_table(pq.read_table(f"{SF_SMALL}/{t}.parquet"),
+                           str(d / "part-00000.parquet"))
+            (d / "_SUCCESS").touch()
+    out = bench.stage_fixture(src, scale)
+    for t in TABLES:
+        base = _rows(f"{SF_SMALL}/{t}.parquet")
+        staged = _rows(f"{out}/{t}.parquet")
+        if scale == 1 or t in SHARED:
+            assert staged == base, t
+        else:
+            assert staged.total() == scale * base.total(), t
+            assert staged & base == base, t  # copy 0 is the input
+        path = f"{out}/{t}.parquet"
+        if t in RESTAGE_FILES:
+            parts = os.listdir(path)
+            assert len(parts) == RESTAGE_FILES[t] * scale, (t, parts)
+        else:
+            assert os.path.isfile(path), t
 
 
 def test_bench_detail_record_provenance():
@@ -84,19 +95,27 @@ def test_bench_detail_record_provenance():
     )
 
 
-@pytest.mark.parametrize("mode", [[], ["--compare", "HEAD"]])
+@pytest.mark.parametrize("mode", [
+    ["--only", "agg_rollup,no_such_query"],
+    ["--compare", "HEAD", "--only", "agg_rollup,no_such_query"],
+    ["--record", "--scale", "2"],
+])
 def test_only_rejects_unknown_query_before_session(mode, monkeypatch, capsys):
     """An unknown `--only` name fails argument parsing, naming the query,
-    in both modes — before any session (and so any JVM) is requested."""
+    in both modes, and so does `--scale` with `--record` (the tracked
+    record stays at scale 1) — before any staging or session (and so
+    any JVM) is requested."""
 
-    def no_session(*a, **k):
-        raise AssertionError("a session was requested")
+    def refuse(*a, **k):
+        raise AssertionError("staging or a session was requested")
 
-    monkeypatch.setattr(bench, "get_session", no_session)
+    monkeypatch.setattr(bench, "stage_fixture", refuse)
+    monkeypatch.setattr(bench, "get_session", refuse)
     with pytest.raises(SystemExit) as exit_:
-        bench.main(mode + ["--only", "agg_rollup,no_such_query"])
-    assert exit_.value.code != 0
-    assert "no_such_query" in capsys.readouterr().err
+        bench.main(mode)
+    assert exit_.value.code == 2
+    culprit = "no_such_query" if "--only" in mode else "--record"
+    assert culprit in capsys.readouterr().err
 
 
 def test_trace_writes_layer_table():
