@@ -31,6 +31,7 @@ from typing import NamedTuple
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from dataextractor_spark.registry import load_all
+from dataextractor_spark.scratch import scratch_dir
 from dataextractor_spark.session import get_session
 
 #: headline set: one per pillar (scan/agg, star join, self-join pairs,
@@ -258,18 +259,6 @@ N_REPS = 3
 #: seed of `datagen.replicate`'s per-copy parameters under ``--scale``,
 #: fixed so every run at one scale reads the same rows
 SCALE_SEED = 0
-
-
-def scratch_dir(prefix: str) -> str:
-    """A per-run temp directory, reaped on exit so repeated bench runs
-    don't accumulate dataset copies or event logs under /tmp."""
-    import atexit
-    import shutil
-    import tempfile
-
-    out = tempfile.mkdtemp(prefix=prefix)
-    atexit.register(shutil.rmtree, out, ignore_errors=True)
-    return out
 
 
 def stage_fixture(sf_dir: str, scale: int) -> str:
@@ -500,11 +489,10 @@ def run_compare(args, names, env_dir: str, sf_dir: str) -> None:
     """
     import statistics
     import subprocess
-    import tempfile
 
     base_sha, trace = args.compare, args.trace
     here = os.path.dirname(os.path.abspath(__file__))
-    wt = tempfile.mkdtemp(prefix="bench_cmp_")
+    wt = scratch_dir("bench_cmp_")
     subprocess.run(
         ["git", "worktree", "add", "--detach", "--force", wt, base_sha],
         cwd=here, check=True, capture_output=True, text=True,

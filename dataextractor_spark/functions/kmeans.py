@@ -29,36 +29,9 @@ independent of corpus size (same contract as a broadcast dim).
 from __future__ import annotations
 
 import math
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 
-
-@contextmanager
-def no_aqe(spark):
-    """Disable adaptive execution for the tiny fixed-shape actions of
-    an index build (per-sweep codebook collects, the opening
-    count/seed jobs): AQE materializes every exchange as its OWN
-    driver-scheduled job before re-planning, so each Lloyd sweep pays
-    two job round-trips (shuffle-stage job + final-stage job) where
-    the static planner needs one — and the r12 profile measured a
-    fixed ~0.3 s/job orchestration tax dominating these sweeps (guide
-    §1.2: fixed overhead before per-task work). Nothing AQE offers
-    applies here: the shuffle is k·d-wide partials (no skew, nothing
-    to coalesce that matters), and the result is collected, not
-    joined. Results are bit-identical — scan partitioning (hence every
-    map-side partial) is untouched, and each group's partials merge in
-    map-output order whether the reduce side is 32 static partitions
-    or one coalesced one. The conf is restored immediately, so every
-    declared query still EXECUTES under AQE (the noop write happens
-    after the builder returns)."""
-    conf = spark.conf
-    old = conf.get("spark.sql.adaptive.enabled", "true")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old)
 
 #: target vectors per IVF cell: a probe scans ~this many candidates.
 IVF_TARGET_CELL_ROWS = 64
@@ -95,10 +68,7 @@ def count_and_seeds(
     from concurrent.futures import ThreadPoolExecutor
 
     sel = vectors.select(id_col, vec_col)
-    # r13: AQE off for the pair — count() under AQE is two jobs
-    # (partial-agg stage materialization + final); one suffices. The
-    # conf is session-wide, so it wraps both concurrent submissions.
-    with no_aqe(vectors.sparkSession), ThreadPoolExecutor(max_workers=2) as pool:
+    with ThreadPoolExecutor(max_workers=2) as pool:
         fut_n = pool.submit(sel.count)
         fut_seeds = pool.submit(
             lambda: sel.orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))
@@ -242,7 +212,7 @@ def kmeans_fit(
       expression count stays O(1) however wide the vectors get.
 
     Operational note for real-scale index builds: each sweep is one
-    driver-scheduled job over the corpus (an IVF+PQ build composes
+    driver-scheduled action over the corpus (an IVF+PQ build composes
     ~a dozen such sweeps). That shape is correct for OFFLINE builds,
     but at 100 TB the input lineage should be pinned before the loop
     (localCheckpoint/persist of the projected vector column — the
@@ -272,13 +242,10 @@ def kmeans_fit(
         F.avg(F.col(vec_col)[i].cast("double")).alias(f"m{i}")
         for i in range(d_dim if d_dim <= wide_agg_max_dim else 0)
     ]
-    # r13: the whole sweep loop runs with AQE off (no_aqe docstring) —
-    # one job per sweep instead of two, same centroids to the bit.
-    with no_aqe(vectors.sparkSession):
-        for _ in range(max_iter):
-            centroids = _one_sweep(
-                vectors, centroids, id_col, vec_col, wide_aggs, d_dim
-            )
+    for _ in range(max_iter):
+        centroids = _one_sweep(
+            vectors, centroids, id_col, vec_col, wide_aggs, d_dim
+        )
     return centroids
 
 

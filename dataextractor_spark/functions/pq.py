@@ -9,7 +9,7 @@ vectors and one that doesn't.
 
 Spark shape, same discipline as the k-means module it builds on:
 - FIT runs the m independent sub-problems FUSED: the corpus explodes
-  once into (subspace, segment) rows and every Lloyd sweep is ONE job
+  once into (subspace, segment) rows and every Lloyd sweep is ONE action
   — one joint assignment expression (per-subspace d2 literals behind
   a CASE on the subspace id) and one groupBy(j, cell) mean update —
   instead of m separate kmeans_fit job chains. Same seeds and the
@@ -17,9 +17,8 @@ Spark shape, same discipline as the k-means module it builds on:
   aggregates the same rows but in a different partial-sum order
   (groupBy(j, cell) vs per-subspace groupBy(cell)), so the learned
   codebooks agree up to float-summation reassociation — equal in
-  exact arithmetic, ulp-level on doubles. The job count drops from
-  m·(sweeps+1) to
-  sweeps+1 (measured ~2× on the sf0.1 IVF+PQ build, where
+  exact arithmetic, ulp-level on doubles. The action count drops from
+  m·(sweeps+1) to sweeps+1 (measured ~2× on the sf0.1 IVF+PQ build, where
   driver-scheduled job overhead, not data volume, dominates).
   Driver state is still m·ksub·(d/m) = ksub·d floats.
 - ASSIGN + reconstruction error are ONE narrow codegen pass: every
@@ -34,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from dataextractor_spark.functions.kmeans import _d2_sql, no_aqe
+from dataextractor_spark.functions.kmeans import _d2_sql
 from dataextractor_spark.pins import pin
 
 
@@ -58,26 +57,6 @@ def pq_fit(
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     ds = dim // m
-    # r13: seed collect + every fused sweep with AQE off (kmeans.no_aqe
-    # — one driver-scheduled job per sweep instead of two, centroids
-    # bit-identical); restored before the caller's query plans run.
-    with no_aqe(vectors.sparkSession):
-        return _pq_fit_jobs(
-            vectors, m=m, ksub=ksub, ds=ds, max_iter=max_iter,
-            id_col=id_col, vec_col=vec_col,
-        )
-
-
-def _pq_fit_jobs(
-    vectors: DataFrame,
-    *,
-    m: int,
-    ksub: int,
-    ds: int,
-    max_iter: int,
-    id_col: str,
-    vec_col: str,
-) -> list[list[list[float]]]:
     seeds = (
         vectors.select(id_col, vec_col)
         .orderBy(F.xxhash64(F.col(id_col)), F.col(id_col))

@@ -148,8 +148,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     single Expand pass (no double scan)."""
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
-    j = c.join(n, c.c_nationkey == n.n_nationkey)
-    j.createOrReplaceTempView("_gs_cust_nation")
     return spark.sql(
         """
         SELECT
@@ -157,10 +155,11 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
             coalesce(n_name, 'ALL')       AS nation,
             count(*)                      AS n,
             round(sum(c_acctbal), 2)      AS total_bal
-        FROM _gs_cust_nation
+        FROM {j}
         GROUP BY GROUPING SETS ((c_mktsegment), (n_name))
         ORDER BY segment, nation
-        """
+        """,
+        j=c.join(n, c.c_nationkey == n.n_nationkey),
     )
 
 
@@ -585,18 +584,27 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("agg_hll_sketch_merge")  # sketch-based → rows-only; merge≡direct in tests
+@query("agg_hll_sketch_merge")  # sketch-based → rows-only; ≤2 % of exact in tests
 def agg_hll_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable distinct sketches (Apache DataSketches HLL) — the
     pre-aggregation pattern that makes distinct counts FREE at query
     time at 100 TB: build per-(status, month) sketches once at ingest
     (a sketch table, bytes per group instead of the raw key stream),
     then answer any coarser rollup by UNIONING sketches — no rescan of
-    the fact table, and sketch union is exact w.r.t. the sketch (union
-    of sketches ≡ sketch of union, pinned in tests/test_scale_paths).
-    approx_count_distinct (agg_approx_distinct) gives one-shot
-    estimates; hll_sketch_agg is the layered form real warehouses
-    materialize."""
+    the fact table.
+
+    The contract is HLL error, not bit equality: a DataSketches
+    estimate depends on the merge tree, i.e. on which partial sketches
+    meet first, which follows the input partitioning. The per-month
+    sketches themselves move with it (status F at sf0.1 read 14508 on
+    the scan's own partitioning, 14501 after repartition(3), 14504
+    after repartition(16); exact 14489), and folding the unions in
+    month order gives the same estimates as hll_union_agg, so no sort
+    makes the rows partitioning-independent. The estimate stays within
+    HLL error of the exact distinct count (≤2 % pinned in
+    tests/test_scale_paths). approx_count_distinct
+    (agg_approx_distinct) gives one-shot estimates; hll_sketch_agg is
+    the layered form real warehouses materialize."""
     o = load_table(spark, sf_dir, "orders")
     monthly = o.groupBy(
         "o_orderstatus", F.date_trunc("month", "o_orderdate").alias("month")

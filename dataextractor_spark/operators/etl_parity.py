@@ -9,8 +9,6 @@ registry entries demonstrate them on the driver tables.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -18,6 +16,7 @@ from dataextractor_spark.catalog import load_table
 from dataextractor_spark.etl.normalize import flatten_array_column, unpivot_dict
 from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
+from dataextractor_spark.scratch import scratch_dir
 
 # The reference's constants dicts (opendotaapi.py:125-183) are {id: name}
 # maps unpivoted to 2-column dims (FIXTURES.md §2b). Same shape, inline:
@@ -203,7 +202,7 @@ def etl_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     years' files. Same plan shape works on s3a:// unchanged.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    out = os.path.join(tempfile.gettempdir(), "dataextractor_spark_partsink")
+    out = scratch_dir("spark_graft_partsink_")
     (
         li.withColumn("ship_year", F.year("l_shipdate").cast("long"))
         .write.mode("overwrite")
@@ -242,9 +241,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSONL is splittable, so the read parallelizes per-file/per-split
     at any scale; one file per input partition on the write."""
     d = load_table(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.gettempdir(), "spark_graft_json_roundtrip"
-    )
+    out = scratch_dir("spark_graft_json_roundtrip_")
     d.write.mode("overwrite").json(out)
     back = spark.read.schema(d.schema).json(out)
     return (
@@ -274,7 +271,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     they did — at scale, prefer JSONL/Parquet for free text exactly
     because multiLine CSV forfeits split parallelism."""
     d = load_table(spark, sf_dir, "documents")
-    out = os.path.join(tempfile.gettempdir(), "spark_graft_csv_roundtrip")
+    out = scratch_dir("spark_graft_csv_roundtrip_")
     d.write.mode("overwrite").option("header", True).option(
         "escape", '"'
     ).csv(out)
@@ -323,7 +320,7 @@ def etl_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a catalog (catalog.py) and use mergeSchema only during
     migrations."""
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(tempfile.gettempdir(), "spark_graft_schema_evo")
+    out = scratch_dir("spark_graft_schema_evo_")
     old_batch = o.filter(F.col("o_orderkey") % 2 == 0).drop("o_orderstatus")
     new_batch = o.filter(F.col("o_orderkey") % 2 == 1).withColumn(
         "o_urgent_flag", F.col("o_orderpriority") == "1-URGENT"
@@ -374,9 +371,7 @@ def source_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         '{"id": 3, "value": 30}',
         '{"id": "not-a-number", "value": 5}',
     ]
-    path = os.path.join(tempfile.gettempdir(), "spark_graft_corrupt_jsonl")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
+    path = scratch_dir("spark_graft_corrupt_jsonl_")
     with open(os.path.join(path, "part-0.jsonl"), "w") as f:
         f.write("\n".join(lines))
     df = spark.read.schema("id BIGINT, value BIGINT, _bad STRING").option(
@@ -619,7 +614,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection, so the scan side scales identically; snappy
     compression is the default on both."""
     d = load_table(spark, sf_dir, "documents")
-    out = os.path.join(tempfile.gettempdir(), "spark_graft_orc_roundtrip")
+    out = scratch_dir("spark_graft_orc_roundtrip_")
     d.write.mode("overwrite").orc(out)
     back = spark.read.schema(d.schema).orc(out)
     return (
@@ -1145,12 +1140,10 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured), so the reader's surrounding-space trim is inert; a
     production feed would set ignoreSurroundingSpaces=false. XML is
     row-splittable on the rowTag, so the scan parallelizes like any
-    text format; mkdtemp isolates concurrent invocations (same
-    rationale as source_binaryfile_scan)."""
+    text format; a per-call scratch_dir isolates concurrent
+    invocations."""
     d = load_table(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.mkdtemp(prefix="dataextractor_spark_xml_"), "docs_xml"
-    )
+    out = scratch_dir("spark_graft_xml_")
     d.write.format("xml").option("rowTag", "doc").mode("overwrite").save(out)
     back = spark.read.format("xml").option("rowTag", "doc").schema(
         d.schema
@@ -1420,12 +1413,10 @@ def source_text_lines_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     is pinned by line count, total characters, and the summed 32-bit
     md5 prefix — a single flipped byte anywhere in the write→read
     cycle breaks the hash. Text files split on line boundaries, so
-    the read parallelizes like any other splittable format; mkdtemp
-    isolates concurrent invocations."""
+    the read parallelizes like any other splittable format; a per-call
+    scratch_dir isolates concurrent invocations."""
     d = load_table(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.mkdtemp(prefix="dataextractor_spark_text_"), "docs_txt"
-    )
+    out = scratch_dir("spark_graft_text_")
     d.select("text").write.mode("overwrite").text(out)
     back = spark.read.text(out)
     md5_prefix = F.conv(

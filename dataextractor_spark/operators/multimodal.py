@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from dataextractor_spark.catalog import load_table
 from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
+from dataextractor_spark.scratch import scratch_dir
 
 #: metadata carried alongside every payload — the typed contract a
 #: 100 TB pipeline needs to route/filter WITHOUT touching bytes.
@@ -1040,7 +1041,6 @@ def source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     formats, which is the documents-table form the REST of the
     multimodal family consumes."""
     import os
-    import tempfile
 
     # bounded file-per-doc shard (doc_id < 500 — the same set at every
     # sf): file-per-row is the DEMO granularity; at corpus scale the
@@ -1052,13 +1052,7 @@ def source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < 500)
         .select("doc_id", "text")
     )
-    # per-invocation unique staging dir: a FIXED shared path raced
-    # when two invocations on the same sf ran concurrently (bench +
-    # pytest) — one rmtree'd/rewrote while the other's binaryFile
-    # listing was in flight. mkdtemp isolates each invocation; the
-    # ≤500-file dir is left for the OS tmp reaper because the scan is
-    # lazy (files must outlive this builder until the driver collects)
-    out = tempfile.mkdtemp(prefix="dataextractor_spark_binsrc_")
+    out = scratch_dir("spark_graft_binsrc_")
 
     def write_partition(rows):
         for r in rows:
@@ -1184,7 +1178,6 @@ def source_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     store). cf. reference README.md:19 (raw payload columns)."""
     import glob as _glob
     import os
-    import tempfile
 
     import pandas as pd
 
@@ -1195,7 +1188,7 @@ def source_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("shard", (F.col("doc_id") / _WARC_SHARD).cast("long"))
         .repartition("shard")
     )
-    out = tempfile.mkdtemp(prefix="dataextractor_spark_warc_")
+    out = scratch_dir("spark_graft_warc_")
 
     def write_partition(rows):
         by_shard: dict[int, list] = {}

@@ -2,11 +2,16 @@
 
 The reference's README promises analytics its code never implements
 (README.md:21-36); a user migrating from it gets them here either as
-DataFrame plans or as PLAIN SQL over registered views — the same
-Catalyst engine underneath. This module also carries the deliberately-
-small Python-UDF surface (SURVEY.md §2.2 'UDF/UDAF'): Arrow-batched
-pandas UDFs only, and only where they demonstrate the boundary — every
-other operator in the engine stays built-in.
+DataFrame plans or as PLAIN SQL text — the same Catalyst engine
+underneath. SQL text names the catalog frames as ``{orders}`` and so
+on; ``spark.sql(text, **tables(spark, sf_dir))`` binds each one under
+a uuid view name and drops it once the query is analyzed, so no query
+leaves a view behind in the caller's session.
+
+This module also carries the deliberately-small Python-UDF surface
+(SURVEY.md §2.2 'UDF/UDAF'): Arrow-batched pandas UDFs only, and only
+where they demonstrate the boundary — every other operator in the
+engine stays built-in.
 """
 
 from __future__ import annotations
@@ -18,15 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 
-from dataextractor_spark.catalog import TABLES, load_table
+from dataextractor_spark.catalog import load_table, tables
 from dataextractor_spark.registry import query
-
-
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Expose the whole catalog as temp views so users can work in
-    pure SQL (the oracle's table names, same data, same engine)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(prefix + t)
 
 
 @query(
@@ -47,25 +45,25 @@ def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
     """,
 )
 def sql_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q3-shaped query expressed as SQL TEXT over registered
-    views — same Catalyst plan as the DataFrame form, proving the SQL
+    """TPC-H-Q3-shaped query expressed as SQL TEXT over the catalog
+    frames — same Catalyst plan as the DataFrame form, proving the SQL
     entry point end-to-end."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT l_orderkey,
                round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
                o_orderdate
-        FROM customer
-        JOIN orders   ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
+        FROM {customer}
+        JOIN {orders}   ON c_custkey = o_custkey
+        JOIN {lineitem} ON l_orderkey = o_orderkey
         WHERE c_mktsegment = 'BUILDING'
           AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
           AND l_shipdate  > TIMESTAMP '1998-01-01 00:00:00'
         GROUP BY l_orderkey, o_orderdate
         ORDER BY revenue DESC, l_orderkey
         LIMIT 10
-        """
+        """,
+        **tables(spark, sf_dir),
     )
 
 
@@ -94,23 +92,23 @@ def subquery_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar subquery (orders above global average) is evaluated once and
     broadcast as a literal — two extra narrow passes over orders, no
     pairwise work, scale-safe."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT c_mktsegment, count(*) AS n_customers,
-               (SELECT count(*) FROM orders
-                WHERE o_totalprice > (SELECT avg(o_totalprice) FROM orders))
+               (SELECT count(*) FROM {orders}
+                WHERE o_totalprice > (SELECT avg(o_totalprice) FROM {orders}))
                    AS n_orders_above_avg
-        FROM customer c
+        FROM {customer} c
         WHERE EXISTS (
-            SELECT 1 FROM orders o
+            SELECT 1 FROM {orders} o
             WHERE o.o_custkey = c.c_custkey
               AND o.o_orderpriority = '1-URGENT'
               AND o.o_totalprice > 100000
         )
         GROUP BY c_mktsegment
         ORDER BY c_mktsegment
-        """
+        """,
+        **tables(spark, sf_dir),
     )
 
 
@@ -137,20 +135,20 @@ def subquery_not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFram
     IN as a null-aware anti join and NOT EXISTS as a plain left-anti
     join; this query pins both results against the oracle so the
     semantic difference can never silently regress."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         WITH maybe_null AS (
             SELECT CASE WHEN o_orderpriority = '1-URGENT' THEN o_custkey END AS k
-            FROM orders
+            FROM {orders}
         )
         SELECT
-            (SELECT count(*) FROM customer WHERE c_custkey NOT IN (SELECT k FROM maybe_null))
+            (SELECT count(*) FROM {customer} WHERE c_custkey NOT IN (SELECT k FROM maybe_null))
                 AS n_not_in,
-            (SELECT count(*) FROM customer c WHERE NOT EXISTS (
+            (SELECT count(*) FROM {customer} c WHERE NOT EXISTS (
                 SELECT 1 FROM maybe_null m WHERE m.k = c.c_custkey))
                 AS n_not_exists
-        """
+        """,
+        **tables(spark, sf_dir),
     )
 
 
@@ -349,24 +347,24 @@ def sql_recursive_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate is the only distributed work, so this stays scan-bound
     at any scale.
     """
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         WITH RECURSIVE months(m) AS (
-            SELECT date_trunc('month', (SELECT min(o_orderdate) FROM orders))
+            SELECT date_trunc('month', (SELECT min(o_orderdate) FROM {orders}))
             UNION ALL
             SELECT m + INTERVAL 1 MONTH FROM months
-            WHERE m < date_trunc('month', (SELECT max(o_orderdate) FROM orders))
+            WHERE m < date_trunc('month', (SELECT max(o_orderdate) FROM {orders}))
         )
         SELECT date_format(m, 'yyyy-MM') AS month,
                coalesce(n_orders, 0) AS n_orders
         FROM months
         LEFT JOIN (
             SELECT date_trunc('month', o_orderdate) AS om, count(*) AS n_orders
-            FROM orders GROUP BY 1
+            FROM {orders} GROUP BY 1
         ) o ON om = m
         ORDER BY month
-        """
+        """,
+        **tables(spark, sf_dir),
     )
 
 
@@ -386,16 +384,16 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     written as a |> chain. Parses to the identical Catalyst plan as
     the classic form — the surface is syntax, not a new engine path —
     which the oracle hash (classic ANSI on DuckDB) proves."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
-        FROM orders
+        FROM {orders}
         |> WHERE o_orderpriority = '1-URGENT'
         |> AGGREGATE CAST(count(*) AS BIGINT) AS n,
                      round(sum(o_totalprice), 2) AS rev
            GROUP BY o_orderstatus
         |> ORDER BY o_orderstatus
-        """
+        """,
+        **tables(spark, sf_dir),
     ).select("o_orderstatus", "n", "rev")
 
 
@@ -419,19 +417,19 @@ def sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     form is window_rank_topn — both engines must agree). Catalyst
     decorrelates the lateral into a join + per-group limit; ties are
     broken by o_orderkey so the result is deterministic."""
-    register_views(spark, sf_dir)
     return spark.sql(
         """
         SELECT c.c_mktsegment, t.o_orderkey, t.o_totalprice
-        FROM (SELECT DISTINCT c_mktsegment FROM customer) c,
+        FROM (SELECT DISTINCT c_mktsegment FROM {customer}) c,
         LATERAL (
             SELECT o_orderkey, o_totalprice
-            FROM orders o JOIN customer cc ON o.o_custkey = cc.c_custkey
+            FROM {orders} o JOIN {customer} cc ON o.o_custkey = cc.c_custkey
             WHERE cc.c_mktsegment = c.c_mktsegment
             ORDER BY o_totalprice DESC, o_orderkey LIMIT 2
         ) t
         ORDER BY c.c_mktsegment, t.o_totalprice DESC, t.o_orderkey
-        """
+        """,
+        **tables(spark, sf_dir),
     )
 
 
@@ -475,32 +473,32 @@ def udtf_bigram_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, f"{toks[i]} {toks[i + 1]}"
 
     spark.udtf.register("bigrams_udtf", Bigrams)
-    load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < 10
-    ).createOrReplaceTempView("docs_udtf_src")
     return spark.sql(
         """
         SELECT s.doc_id, b.pos, b.bigram
-        FROM docs_udtf_src s, LATERAL bigrams_udtf(s.text) b
+        FROM {docs} s, LATERAL bigrams_udtf(s.text) b
         ORDER BY s.doc_id, b.pos
-        """
+        """,
+        docs=load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 10),
     )
 
 
+#: one text for both engines: the oracle binds ``{part}`` to DuckDB's
+#: table name, the query to the catalog frame
 _SCALAR_CORR_SQL = """
 SELECT p.p_brand,
        p.p_partkey,
        p.p_name,
        p.p_retailprice AS top_price
-FROM part p
+FROM {part} p
 WHERE p.p_retailprice = (SELECT max(p2.p_retailprice)
-                         FROM part p2
+                         FROM {part} p2
                          WHERE p2.p_brand = p.p_brand)
 ORDER BY p.p_brand, p.p_partkey
 """
 
 
-@query("subquery_scalar_correlated", oracle=_SCALAR_CORR_SQL)
+@query("subquery_scalar_correlated", oracle=_SCALAR_CORR_SQL.format(part="part"))
 def subquery_scalar_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated SCALAR subquery (the TPC-H Q2 'min-cost supplier'
     shape: row qualifies iff its value equals a per-group extreme
@@ -515,8 +513,7 @@ def subquery_scalar_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg over brands (tiny) broadcast back over the scan — no
     per-row re-execution, which is what a naive engine would do with
     a correlated subquery. Identical text runs on both engines."""
-    register_views(spark, sf_dir)
-    return spark.sql(_SCALAR_CORR_SQL)
+    return spark.sql(_SCALAR_CORR_SQL, **tables(spark, sf_dir))
 
 
 @query(
@@ -642,9 +639,6 @@ def sql_udf_scalar_tvf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact. The oracle replays both bodies inline, proving the
     definition/invocation indirection loses nothing. One lineitem
     scan, one broadcast range join, one hash aggregate."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "li_sqludf"
-    )
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION net_cents(
@@ -668,12 +662,13 @@ def sql_udf_scalar_tvf(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(count(*) AS BIGINT) AS n,
                CAST(sum(net_cents(l_extendedprice, l_discount, l_tax))
                     AS BIGINT) AS net_cents
-        FROM li_sqludf
+        FROM {lineitem}
         JOIN qty_bands()
           ON CAST(l_quantity AS BIGINT) BETWEEN lo AND hi
         GROUP BY band
         ORDER BY band
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -802,15 +797,12 @@ def sql_parameterized_args(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan, never string splices, so Catalyst constant-folds and
     pushes them down exactly like hand-written literals). The oracle
     inlines the same literals, proving the binding is lossless."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "orders_param"
-    )
     return spark.sql(
         """
         SELECT o_orderpriority,
                CAST(count(*) AS BIGINT) AS n,
                round(sum(o_totalprice), 2) AS revenue
-        FROM orders_param
+        FROM {orders}
         WHERE o_orderdate >= :from_date
           AND o_orderdate < :to_date
           AND o_totalprice >= :min_price
@@ -822,4 +814,5 @@ def sql_parameterized_args(spark: SparkSession, sf_dir: str) -> DataFrame:
             "to_date": datetime.date(1998, 1, 1),
             "min_price": 100000.0,
         },
+        orders=load_table(spark, sf_dir, "orders"),
     )

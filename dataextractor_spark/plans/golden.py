@@ -30,6 +30,7 @@ tests/test_plan_goldens.py.
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -134,6 +135,24 @@ def normalize_plan(plan: str) -> str:
     return "\n".join(line.rstrip() for line in plan.splitlines()).strip() + "\n"
 
 
+@contextmanager
+def _scoped_conf(spark, pinned: dict[str, str]):
+    """Set ``pinned`` on the session around a capture, then restore
+    each key to its previous value (or unset it if it had none)."""
+    conf = spark.conf
+    prev = {k: conf.get(k, None) for k in pinned}
+    for k, v in pinned.items():
+        conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, p in prev.items():
+            if p is None:
+                conf.unset(k)
+            else:
+                conf.set(k, p)
+
+
 def normalized_plan(df: DataFrame) -> str:
     """Normalized formatted physical plan of ``df`` (golden format).
 
@@ -151,22 +170,12 @@ def normalized_plan(df: DataFrame) -> str:
       protects against at scale — would leave the snapshot unchanged
       (verified during the round-12 mutation check).
     """
-    conf = df.sparkSession.conf
     pinned = {
         "spark.sql.debug.maxToStringFields": "400",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: conf.get(k, None) for k in pinned}
-    for k, v in pinned.items():
-        conf.set(k, v)
-    try:
+    with _scoped_conf(df.sparkSession, pinned):
         return normalize_plan(physical_plan(df, "formatted"))
-    finally:
-        for k, p in prev.items():
-            if p is None:
-                conf.unset(k)
-            else:
-                conf.set(k, p)
 
 
 def lpa_kernel_golden_text(spark, sf_dir: str) -> str:
@@ -185,7 +194,6 @@ def lpa_kernel_golden_text(spark, sf_dir: str) -> str:
     from pyspark.sql import functions as F
 
     from dataextractor_spark.catalog import load_table
-    from dataextractor_spark.functions.kmeans import no_aqe
     from dataextractor_spark.operators.graph_ops import _lpa_labels_plan
     from dataextractor_spark.pins import pin
 
@@ -202,7 +210,7 @@ def lpa_kernel_golden_text(spark, sf_dir: str) -> str:
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).transform(pin)
-    with no_aqe(spark):
+    with _scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         return normalized_plan(_lpa_labels_plan(edges))
 
 

@@ -40,6 +40,60 @@ def test_rows_only_query_runs(spark, name):
     assert all(c for c in df.columns)
 
 
+#: queries for each kind of session write an operator must not make: a
+#: k-means fit (a session-wide conf toggle), SQL text over catalog
+#: frames (temp views), and file sinks (a path shared between runs)
+THREADED = (
+    "sim_ann_ivf_kmeans",
+    "sql_shipping_priority",
+    "sql_parameterized_args",
+    "agg_grouping_sets",
+    "source_json_roundtrip",
+    "etl_partitioned_sink",
+)
+
+
+def test_two_threads_leave_session_as_found(spark):
+    """Two threads of one non-UTC session run the same queries in
+    opposite orders. Every result must still be right (oracled ones
+    against DuckDB, rows-only ones against a sequential run in the same
+    session), and afterwards the session's conf and table/view list
+    must equal the snapshot taken once ``load_table`` applied its pins,
+    the one sanctioned conf write."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from dataextractor_spark.catalog import load_table
+
+    s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/New_York")
+    load_table(s, SF_ORACLE, "orders")
+    conf0 = s.conf.getAll
+    tables0 = sorted((t.name, t.isTemporary) for t in s.catalog.listTables())
+
+    def rows(name):
+        return sorted(map(tuple, SPECS[name].fn(s, SF_ORACLE).collect()))
+
+    expected = {n: rows(n) for n in THREADED if not SPECS[n].oracle}
+
+    def run(order):
+        for name in order:
+            spec = SPECS[name]
+            if spec.oracle:
+                compare_to_oracle(spec.fn(s, SF_ORACLE), spec.oracle, SF_ORACLE)
+            else:
+                assert rows(name) == expected[name], name
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [pool.submit(run, THREADED), pool.submit(run, THREADED[::-1])]
+        for f in futs:
+            f.result(timeout=900)
+
+    assert s.conf.getAll == conf0
+    assert sorted(
+        (t.name, t.isTemporary) for t in s.catalog.listTables()
+    ) == tables0
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 

@@ -808,6 +808,54 @@ def test_operators_read_no_environment():
     assert reads == [], reads
 
 
+def test_operators_write_no_session_state():
+    """Static gate: a query leaves the caller's session as it found it.
+    Under ``operators/`` and ``functions/`` no code may set or unset a
+    session conf (``<x>.conf.set``, or ``conf.set`` on a saved
+    ``conf``) or create a temp view (SQL text binds its frames with
+    ``spark.sql(text, **frames)`` instead). Anywhere in the package,
+    ``tempfile.mkdtemp``/``gettempdir`` may appear only in
+    ``scratch.py``, the one scratch-directory helper, so no query
+    sinks files to a path a concurrent run shares. The one sanctioned
+    conf write, ``catalog.load_table``'s session pins, sits outside
+    the scanned directories."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "dataextractor_spark"
+
+    def is_conf(node) -> bool:
+        return (isinstance(node, ast.Attribute) and node.attr == "conf") or (
+            isinstance(node, ast.Name) and node.id == "conf"
+        )
+
+    def offends(node) -> bool:
+        return isinstance(node, ast.Attribute) and (
+            (node.attr in ("set", "unset") and is_conf(node.value))
+            or node.attr in ("createTempView", "createOrReplaceTempView",
+                             "createGlobalTempView",
+                             "createOrReplaceGlobalTempView")
+        )
+
+    writes = [
+        (str(py.relative_to(pkg)), node.lineno)
+        for d in ("operators", "functions")
+        for py in sorted((pkg / d).rglob("*.py"))
+        for node in ast.walk(ast.parse(py.read_text()))
+        if offends(node)
+    ]
+    assert writes == [], writes
+    tmp = [
+        (str(py.relative_to(pkg)), node.lineno)
+        for py in sorted(pkg.rglob("*.py"))
+        if py.name != "scratch.py"
+        for node in ast.walk(ast.parse(py.read_text()))
+        if isinstance(node, ast.Attribute)
+        and node.attr in ("mkdtemp", "gettempdir")
+    ]
+    assert tmp == [], tmp
+
+
 #: The evidence epoch the current PRIORITY_ORDER rotation was derived
 #: from: CORRECTNESS_r{N}.json files with N > this are ignored by the
 #: rotation gate (they land AFTER the order was staged — typically the

@@ -13,12 +13,19 @@ class, a positive-row-count check. Record format matches the driver's
 CORRECTNESS_r{N}.json per-query schema exactly, wrapped with the sweep
 metadata header the DRIVER_SIM files carry.
 
+After ``entry()`` and after each query the sweep also diffs the
+session's state: conf entries, temp views, user functions and
+registered data sources. Whatever a step added or changed is listed
+under ``session_writes`` in the header and in the printed summary, so
+a query that quietly writes to the caller's session shows up by name
+(``entry`` carries ``catalog.load_table``'s once-per-session pins).
+
     python tools/driver_sim.py 12            # writes DRIVER_SIM_r12.json
     python tools/driver_sim.py 12 --dry-run  # run + print, write nothing
 
-Run EXCLUSIVELY: several registry queries sink to fixed /tmp paths, so
-two concurrent sweeps (or a sweep next to the pytest suite) race each
-other (.claude/skills/verify/SKILL.md).
+Queries that sink files write to a fresh per-call directory
+(``dataextractor_spark.scratch.scratch_dir``), so a sweep may run next
+to another sweep, a bench run or the pytest suite.
 """
 
 from __future__ import annotations
@@ -34,6 +41,27 @@ sys.path.insert(0, str(ROOT))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_VERIFY_SF", "/root/testdata/sf0.01")
 SESSION_TZ = "America/New_York"  # hostile tz probe, per the verify skill
+
+
+def session_state(spark) -> dict[str, set[str]]:
+    """What a query could leave behind in the caller's session. Spark
+    has no public listing of registered data sources, so the names are
+    read from the session's DataSourceManager by reflection."""
+    dsm = spark._jsparkSession.sessionState().dataSourceManager()
+    field = dsm.getClass().getDeclaredField("runtimeDataSourceBuilders")
+    field.setAccessible(True)
+    return {
+        "conf": {f"{k}={v}" for k, v in spark.conf.getAll.items()},
+        "views": {t.name for t in spark.catalog.listTables() if t.isTemporary},
+        "functions": {r[0] for r in spark.sql("SHOW USER FUNCTIONS").collect()},
+        "sources": set(field.get(dsm).keys()),
+    }
+
+
+def state_diff(before: dict, after: dict) -> dict[str, list[str]]:
+    """Entries of ``after`` missing from ``before``, per kind (a changed
+    conf value shows as its new ``key=value``)."""
+    return {k: sorted(after[k] - before[k]) for k in after if after[k] - before[k]}
 
 
 def main() -> int:
@@ -57,9 +85,20 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from tests.oracle import compare_to_oracle
 
+    writes: dict[str, dict] = {}
+    state = session_state(spark)
+
+    def note_writes(step: str) -> None:
+        nonlocal state
+        after = session_state(spark)
+        if diff := state_diff(state, after):
+            writes[step] = diff
+        state = after
+
     t0 = time.time()
     entry_rows = len(entry_mod.entry(spark).collect())
     assert entry_rows > 0, "entry() returned no rows"
+    note_writes("entry")
 
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     records: dict[str, dict] = {}
@@ -92,6 +131,7 @@ def main() -> int:
         except Exception as exc:  # record reds, never abort the sweep
             rec["err"] = f"{type(exc).__name__}: {exc}"[:500]
         records[name] = rec
+        note_writes(name)
         flag = "ok" if rec["err"] in (None, "no_oracle") else "RED"
         if flag == "RED" or len(records) % 50 == 0:
             print(f"[{len(records)}/{len(qs)}] {name}: {flag}", file=sys.stderr)
@@ -101,6 +141,7 @@ def main() -> int:
         "session_tz": SESSION_TZ,
         "n_queries": len(qs),
         "n_green": n_green,
+        "session_writes": writes,
         "queries": records,
     }
     reds = {n: r["err"] for n, r in records.items() if r["err"] not in (None, "no_oracle")}
@@ -111,6 +152,7 @@ def main() -> int:
                 "n_green": n_green,
                 "reds": reds,
                 "entry_rows": entry_rows,
+                "session_writes": writes,
                 "wall_s": round(time.time() - t0, 1),
             }
         )
