@@ -12,7 +12,7 @@ through the one loop in `time_queries`.
     python bench.py                   # all headline queries, min of 3
     python bench.py --record          # same, and rewrite BENCH_detail.json
     python bench.py --compare SHA     # paired cur/base ratios vs commit SHA
-    python bench.py --only q1,q2      # a subset of the headline (any mode)
+    python bench.py --only q1,q2      # just these registered queries (any mode)
     python bench.py --trace           # also write the per-query layer table
     python bench.py --scale M         # the fixture as M disjoint copies
                                       #   (any mode but --record)
@@ -30,7 +30,7 @@ from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from dataextractor_spark.registry import load_all
+from dataextractor_spark.registry import PRIORITY_ORDER, load_all
 from dataextractor_spark.scratch import scratch_dir
 from dataextractor_spark.session import get_session
 
@@ -556,8 +556,9 @@ def run_compare(args, names, env_dir: str, sf_dir: str) -> None:
 
 
 def _parse_args(argv):
-    """Flags, plus the headline subset they select. Every check here
-    runs before a session starts."""
+    """Flags, plus the queries they select: the headline, or any
+    registered queries named by ``--only`` (headline order first).
+    Every check here runs before a session starts."""
     ap = argparse.ArgumentParser(
         description="Time the headline queries through the noop sink."
     )
@@ -566,7 +567,7 @@ def _parse_args(argv):
     ap.add_argument("--compare", metavar="SHA",
                     help="paired cur/base run against commit SHA")
     ap.add_argument("--only", metavar="Q1,Q2",
-                    help="time only these headline queries")
+                    help="time only these registered queries")
     ap.add_argument("--trace", action="store_true",
                     help="write the per-query layer table to "
                          "BENCH_trace_local.json")
@@ -578,11 +579,12 @@ def _parse_args(argv):
     names = HEADLINE
     if args.only is not None:
         keep = {s.strip() for s in args.only.split(",") if s.strip()}
-        unknown = sorted(keep - set(HEADLINE))
+        unknown = sorted(keep - set(PRIORITY_ORDER))
         if unknown or not keep:
-            ap.error("--only: not a headline query: "
+            ap.error("--only: not a registered query: "
                      + (", ".join(unknown) or repr(args.only)))
         names = [n for n in HEADLINE if n in keep]
+        names += sorted(keep - set(HEADLINE))
     if args.record and (args.compare or args.only or args.trace
                         or args.scale != 1):
         ap.error("--record writes the full-headline record at scale 1; "

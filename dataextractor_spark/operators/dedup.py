@@ -907,14 +907,9 @@ def dedup_span_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pos",
         F.md5(F.concat_ws(" ", F.slice("w", F.col("pos"), k))).alias("h"),
     )
-    # lazy checkpoint: both self-join sides replay the SAME shingled
-    # + capped partitions instead of re-scanning and re-hashing the
-    # corpus twice (the plan otherwise duplicates the whole narrow
-    # prefix per side — see PLANS.md)
     rare = (
         sh.withColumn("freq", F.count(F.lit(1)).over(Window.partitionBy("h")))
         .filter(F.col("freq") <= 50)
-        .transform(pin)
     )
     a = rare.select(
         F.col("doc_id").alias("doc_a"), F.col("pos").alias("pos_a"), "h"

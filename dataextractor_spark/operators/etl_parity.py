@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dataextractor_spark.catalog import load_table
 from dataextractor_spark.etl.normalize import flatten_array_column, unpivot_dict
-from dataextractor_spark.pins import pin
 from dataextractor_spark.registry import query
 from dataextractor_spark.scratch import scratch_dir
 
@@ -1055,7 +1054,6 @@ def etl_partition_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = (
         li.groupBy(F.date_trunc("month", "l_shipdate").alias("mon"))
         .agg(F.count(F.lit(1)).cast("long").alias("rows_"))
-        .transform(pin)  # one scan: feeds the summary twice
     )
     totals = p.agg(
         F.count(F.lit(1)).cast("long").alias("np"),

@@ -579,15 +579,12 @@ def profile_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("is_ref"),
     )
-    # bucket-bounded and consumed by both the PSI terms and the totals
-    # row — checkpoint so the fact scan happens once.
     counts = (
         sides.groupBy("bucket")
         .agg(
             F.sum("is_ref").cast("double").alias("ref_n"),
             F.sum(1 - F.col("is_ref")).cast("double").alias("cur_n"),
         )
-        .transform(pin)
     )
     tot = counts.agg(
         F.sum("ref_n").alias("ref_tot"), F.sum("cur_n").alias("cur_tot")
@@ -678,8 +675,9 @@ def agg_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("is_ref"),
     )
     # grid-bounded (≤122 rows) and consumed by BOTH the cumulative
-    # window and the totals row — the lazy checkpoint makes the fact
-    # table scan happen once, not once per consumer.
+    # window and the totals row. Unpinned, exchange reuse still scans
+    # the fact table once, but each consumer re-reads the shuffle; that
+    # measured slower than the pin (pins.py).
     counts = (
         sides.groupBy("bucket")
         .agg(

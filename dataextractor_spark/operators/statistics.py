@@ -3010,7 +3010,6 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("v")
         )
-        .transform(pin)
     )
     wr = Window.orderBy("v", "day")
     ranked = daily.select(

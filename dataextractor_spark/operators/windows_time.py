@@ -1538,7 +1538,6 @@ def time_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("dollars")
         )
-        .transform(pin)
     )
     lags = F.broadcast(
         spark.range(1, _ACF_MAX_LAG + 1).select(F.col("id").alias("lag"))
@@ -1636,7 +1635,6 @@ def time_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("v")
         )
-        .transform(pin)
     )
     a = daily.select(F.col("d").alias("ad"), F.col("v").alias("av"))
     b = daily.select(F.col("d").alias("bd"), F.col("v").alias("bv"))

@@ -191,39 +191,15 @@ def lpa_kernel_golden_text(spark, sf_dir: str) -> str:
     other golden (auto-broadcast disabled inside normalized_plan, so
     the join shape is the scale-relevant one). Gate:
     tests/test_plan_goldens.py::test_lpa_sweep_kernel_golden."""
-    from pyspark.sql import functions as F
-
     from dataextractor_spark.catalog import load_table
-    from dataextractor_spark.operators.graph_ops import _lpa_labels_plan
+    from dataextractor_spark.operators.graph_ops import (
+        _incidence_arcs,
+        _lpa_labels_plan,
+    )
     from dataextractor_spark.pins import pin
 
     li = load_table(spark, sf_dir, "lineitem")
-    pairs = (
-        li.select("l_suppkey", "l_partkey")
-        .distinct()
-        .transform(pin)
-    )
-    fwd = pairs.select(
-        (F.col("l_suppkey") * 2).alias("src"),
-        (F.col("l_partkey") * 2 + 1).alias("dst"),
-    )
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).transform(pin)
+    pairs = li.select("l_suppkey", "l_partkey").distinct().transform(pin)
+    edges = _incidence_arcs(pairs).transform(pin)
     with _scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         return normalized_plan(_lpa_labels_plan(edges))
-
-
-def assert_plan_parity(df_before: DataFrame, df_after: DataFrame) -> None:
-    """The refactor-time parity check: normalized plans byte-identical.
-
-    This is the exact procedure used manually in rounds 10–11 for the
-    theil-sen / triangle / simhash / LPA / clustering extractions.
-    """
-    a, b = normalized_plan(df_before), normalized_plan(df_after)
-    if a != b:
-        import difflib
-
-        diff = "\n".join(difflib.unified_diff(
-            a.splitlines(), b.splitlines(), "before", "after", lineterm=""))
-        raise AssertionError(f"plan parity broken:\n{diff}")

@@ -16,12 +16,6 @@ def physical_plan(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
-def executed_plan(df: DataFrame) -> str:
-    """Final (post-AQE) executed plan string — only meaningful after an
-    action has run on df."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def shuffle_exchange_count(df: DataFrame) -> int:
     """Number of shuffle exchanges in the physical plan (broadcast
     exchanges excluded) — the engine's primary scale cost metric."""

@@ -57,64 +57,47 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #: once (load_all asserts both directions), so adding a query without
 #: scheduling it is an error, and reordering is a one-list edit.
 PRIORITY_ORDER: tuple[str, ...] = (
-    # ================= round-13 prefix (50 slots) =================
+    # ================= round-14 prefix (50 slots) =================
     # Generated by tools/rotate_priority_order.py from the
-    # CORRECTNESS_r01..r12 ledgers: changed-first entries (if
+    # CORRECTNESS_r01..r13 ledgers: changed-first entries (if
     # any), then oldest-driver-evidence-first, stable within a
     # round. Tail stays sorted so future windows are pre-staged
     # (CI: tests/test_plans.py
     # test_priority_order_follows_rotation_policy).
-    "text_bigram_lm_ppl",  # changed-first (rule 1)
-    "text_pmi_bigrams",  # changed-first (rule 1)
-    "text_decontaminate",  # changed-first (rule 1)
-    "agg_anomaly_mad",  # changed-first (rule 1)
-    "sim_matryoshka_recall",  # changed-first (rule 1)
-    "graph_triangle_count",  # changed-first (rule 1)
-    "graph_local_clustering",  # changed-first (rule 1)
-    "graph_label_propagation",  # changed-first (rule 1)
-    "sim_ivfpq_search",  # changed-first (rule 1)
-    "sim_ann_ivf_kmeans",  # changed-first (rule 1)
+    "dedup_span_extract",  # changed-first (rule 1)
+    "etl_partition_skew_audit",  # changed-first (rule 1)
+    "profile_drift_psi",  # changed-first (rule 1)
+    "stats_runs_test",  # changed-first (rule 1)
+    "time_autocorrelation",  # changed-first (rule 1)
+    "time_rolling_median",  # changed-first (rule 1)
+    "sql_shipping_priority",  # changed-first (rule 1)
+    "subquery_exists_correlated",  # changed-first (rule 1)
+    "subquery_not_in_null_semantics",  # changed-first (rule 1)
+    "sql_recursive_months",  # changed-first (rule 1)
+    "sql_pipe_syntax",  # changed-first (rule 1)
+    "sql_lateral_topn",  # changed-first (rule 1)
+    "udtf_bigram_explode",  # changed-first (rule 1)
+    "subquery_scalar_correlated",  # changed-first (rule 1)
+    "sql_udf_scalar_tvf",  # changed-first (rule 1)
+    "sql_parameterized_args",  # changed-first (rule 1)
+    "agg_grouping_sets",  # changed-first (rule 1)
+    "etl_partitioned_sink",  # changed-first (rule 1)
+    "source_json_roundtrip",  # changed-first (rule 1)
+    "source_csv_roundtrip",  # changed-first (rule 1)
+    "source_orc_roundtrip",  # changed-first (rule 1)
+    "etl_schema_evolution",  # changed-first (rule 1)
+    "source_corrupt_records",  # changed-first (rule 1)
+    "source_xml_roundtrip",  # changed-first (rule 1)
+    "source_text_lines_scan",  # changed-first (rule 1)
+    "source_binaryfile_scan",  # changed-first (rule 1)
+    "source_warc_scan",  # changed-first (rule 1)
     "sim_semantic_dedup",  # changed-first (rule 1)
+    "sim_ann_ivf_kmeans",  # changed-first (rule 1)
+    "sim_ivfpq_search",  # changed-first (rule 1)
     "sim_pq_compress",  # changed-first (rule 1)
     "sim_pq_adc_search",  # changed-first (rule 1)
-    "agg_theil_sen_trend",  # changed-first (rule 1)
-    "window_deciles",  # changed-first (rule 1)
+    "sim_recall_eval",  # changed-first (rule 1)
     # -- latest driver row r7 --
-    "ab_srm_guardrail",
-    "text_readability",
-    "etl_zonemap_prune_audit",
-    "text_ngram_novelty",
-    "graph_assortativity",
-    "agg_ols_two_features",
-    "stats_proportion_ztest",
-    "ab_delta_method_ratio",
-    "multimodal_gif_codec",
-    "time_max_drawdown",
-    "ab_funnel_lift",
-    "sample_neyman_allocation",
-    "time_interrupted_series",
-    "text_source_similarity",
-    "text_compression_quality",
-    "time_autocorrelation",
-    "sample_ht_estimator",
-    "sim_centroid_classify_eval",
-    "stats_kendall_tau",
-    "stats_runs_test",
-    "agg_chi2_cell_residuals",
-    "etl_delete_rewrite_plan",
-    "time_rolling_median",
-    "ml_calibration_error",
-    "ab_power_mde",
-    "multimodal_pixel_histogram",
-    "graph_hits_scores",
-    "stats_brown_forsythe",
-    "udf_arrow_map_tokencount",
-    "sql_observe_metrics",
-    "sql_parameterized_args",
-    "source_text_lines_scan",
-    "time_interevent_gaps",
-    "text_vocab_growth",
-    "stats_wilcoxon_signed_rank",
     "agg_mcnemar_paired",
     "agg_capture_recapture",
     "stats_cochran_q",
@@ -145,16 +128,12 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "rest_paged_scan",
     "join_bucketed_colocated",
     "text_chunk_documents",
-    "source_corrupt_records",
     "sample_uniform_k",
     "sample_split_groupsafe",
-    "udtf_bigram_explode",
     "text_bpe_pretokenize",
     "text_pii_redact",
     "text_gopher_filters",
-    "subquery_scalar_correlated",
     "graph_pagerank",
-    "dedup_span_extract",
     "sample_mixture_weights",
     "text_unigram_logprob",
     "sample_shard_shuffle",
@@ -170,7 +149,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "sample_stratified",
     "profile_table",
     "agg_bitmap_distinct",
-    "profile_drift_psi",
     "time_downsample_ohlc",
     "dedup_fuzzy_names",
     "agg_ks_drift",
@@ -192,7 +170,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "agg_approx_distinct",
     "agg_rollup",
     "agg_cube",
-    "agg_grouping_sets",
     "agg_heatmap_bins",
     "agg_having",
     "agg_histogram",
@@ -201,11 +178,7 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "agg_conditional_filter",
     "agg_string_listagg",
     "agg_corr_covar",
-    "etl_partitioned_sink",
-    "source_json_roundtrip",
     "etl_epoch_roundtrip",
-    "source_csv_roundtrip",
-    "etl_schema_evolution",
     "scalar_map_funcs",
     "point_lookup_by_key",
     "join_stream_dim_enrich",
@@ -223,7 +196,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "window_first_last_nth",
     "time_scd2_versions",
     "rest_datasource_scan",
-    "sql_lateral_topn",
     "scalar_json_funcs",
     "multimodal_resize",
     "sim_ann_ivf",
@@ -247,13 +219,8 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "time_trailing_week_revenue",
     "time_cohort_retention",
     "rest_publicmatches_pipeline",
-    "sql_shipping_priority",
-    "subquery_exists_correlated",
-    "subquery_not_in_null_semantics",
     "pivot_unpivot_roundtrip",
     "udf_zscore_median",
-    "sql_recursive_months",
-    "sql_pipe_syntax",
     "scalar_string_funcs",
     "scalar_date_funcs",
     "scalar_math_funcs",
@@ -280,7 +247,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "time_interpolate_linear",
     "sample_temporal_split_embargo",
     "dedup_shingle_containment",
-    "source_orc_roundtrip",
     "time_sliding_distinct_users",
     "time_ewma_smooth",
     "join_scd2_point_in_time",
@@ -303,7 +269,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "agg_frequent_items",
     "multimodal_phash_neardup",
     "agg_hll_intersection",
-    "sim_recall_eval",
     "time_sliding_distinct_hll",
     "sim_mmr_diversify",
     "multimodal_png_codec",
@@ -315,9 +280,7 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "graph_link_prediction",
     "ab_cuped_adjustment",
     "stats_anova_oneway",
-    "etl_partition_skew_audit",
     "text_dsir_importance",
-    "source_warc_scan",
     "sim_embedding_drift",
     "text_quality_threshold_sweep",
     "graph_kcore_decomposition",
@@ -334,7 +297,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "agg_tail_cvar",
     "agg_skyline_pareto",
     "time_burstiness",
-    "source_binaryfile_scan",
     "graph_bfs_levels",
     "time_lag_xcorr",
     "agg_mode_deterministic",
@@ -359,9 +321,48 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "stats_ttest_welch",
     "stats_mann_whitney_u",
     "stats_spearman_corr",
-    "source_xml_roundtrip",
     "scalar_variant_funcs",
-    "sql_udf_scalar_tvf",
+    # -- latest driver row r13 --
+    "text_bigram_lm_ppl",
+    "text_pmi_bigrams",
+    "text_decontaminate",
+    "agg_anomaly_mad",
+    "sim_matryoshka_recall",
+    "graph_triangle_count",
+    "graph_local_clustering",
+    "graph_label_propagation",
+    "agg_theil_sen_trend",
+    "window_deciles",
+    "ab_srm_guardrail",
+    "text_readability",
+    "etl_zonemap_prune_audit",
+    "text_ngram_novelty",
+    "graph_assortativity",
+    "agg_ols_two_features",
+    "stats_proportion_ztest",
+    "ab_delta_method_ratio",
+    "multimodal_gif_codec",
+    "time_max_drawdown",
+    "ab_funnel_lift",
+    "sample_neyman_allocation",
+    "time_interrupted_series",
+    "text_source_similarity",
+    "text_compression_quality",
+    "sample_ht_estimator",
+    "sim_centroid_classify_eval",
+    "stats_kendall_tau",
+    "agg_chi2_cell_residuals",
+    "etl_delete_rewrite_plan",
+    "ml_calibration_error",
+    "ab_power_mde",
+    "multimodal_pixel_histogram",
+    "graph_hits_scores",
+    "stats_brown_forsythe",
+    "udf_arrow_map_tokencount",
+    "sql_observe_metrics",
+    "time_interevent_gaps",
+    "text_vocab_growth",
+    "stats_wilcoxon_signed_rank",
 )
 
 

@@ -785,6 +785,80 @@ def test_every_pin_goes_through_pins_module():
     assert [f for f, _ in calls] == ["dataextractor_spark/pins.py"], calls
 
 
+#: Every ``pin`` call site in the package (``pin(df)`` or
+#: ``.transform(pin)``), as file → expected count. A pin stays only
+#: where Spark cannot share the subtree itself (``pins.py``): a loop or
+#: fit that re-reads it, a second action, consumers that must agree on
+#: values, or a plan that rescans a table when unpinned (the session's
+#: default AQE and broadcast settings), plus the few shared pins that
+#: measured slower removed. Adding or removing a pin fails this gate
+#: until the census is edited.
+PIN_SITES = {
+    "functions/graph.py": 2,       # loop: components sweeps truncate lineage
+    "functions/pagerank.py": 2,    # loop: power-iteration sweeps
+    "functions/pq.py": 1,          # fit: codebook training re-reads the sample
+    "operators/graph_ops.py": 16,  # loop: BFS/LPA/k-core/HITS sweeps, and the
+                                   # co-purchase/incidence builders they re-read
+    "operators/aggregates.py": 4,  # value agreement: HLL sketch bytes;
+                                   # measured rescan: bitmap, count-min, MI
+    "operators/statistics.py": 8,  # value agreement: Theil-Sen partition ids
+                                   # (2); measured rescan: chi², share,
+                                   # basket; measured slower unpinned:
+                                   # Kendall tau, chi² cells, RFM
+    "operators/sampling.py": 2,    # measured slower unpinned: KS drift,
+                                   # Neyman allocation
+    "operators/behavior.py": 14,   # measured rescan: funnels, attribution,
+                                   # lag/forecast/new-vs-returning events;
+                                   # measured slower unpinned: seasonality
+                                   # strength and anomaly, Markov
+    "operators/dedup.py": 4,       # measured rescan: token/signature/shingle
+                                   # tables read by both join sides
+    "operators/text.py": 10,       # measured rescan: token/bigram tables;
+                                   # measured slower unpinned: calibration,
+                                   # source vocabulary overlap
+    "operators/windows_time.py": 3,  # measured rescan: cohort, concurrency,
+                                     # interrupted series
+    "operators/similarity.py": 2,  # measured rescan: embeddings
+    "operators/multimodal.py": 1,  # measured rescan: the codec Python stage
+                                   # runs per join side under broadcast
+    "operators/streaming_audit.py": 1,  # measured rescan: events
+    "plans/golden.py": 2,          # mirrors graph_label_propagation's pins
+                                   # for the LPA kernel golden
+}
+
+
+def test_pins_are_exactly_the_census():
+    """Static gate: the package's ``pin`` call sites are exactly
+    ``PIN_SITES`` — counted on the AST, so a docstring or comment that
+    mentions pin does not count, and ``pin(df)`` and
+    ``df.transform(pin)`` both do."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "dataextractor_spark"
+    got: dict[str, int] = {}
+    for py in sorted(pkg.rglob("*.py")):
+        n = sum(
+            1
+            for node in ast.walk(ast.parse(py.read_text()))
+            if isinstance(node, ast.Call)
+            and (
+                (isinstance(node.func, ast.Name) and node.func.id == "pin")
+                or (
+                    isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "transform"
+                    and any(
+                        isinstance(a, ast.Name) and a.id == "pin"
+                        for a in node.args
+                    )
+                )
+            )
+        )
+        if n:
+            got[str(py.relative_to(pkg))] = n
+    assert got == PIN_SITES, got
+
+
 def test_operators_read_no_environment():
     """Static gate: a query's plan is decided by code and the session,
     never by an environment variable the caller may not know is set.
@@ -862,43 +936,60 @@ def test_operators_write_no_session_state():
 #: driver's harvest of the very window being checked). Bumping this is
 #: part of each round's rotation edit, together with re-sorting the
 #: list; forgetting either fails the gate.
-EVIDENCE_EPOCH = 12
+EVIDENCE_EPOCH = 13
 
 #: Queries allowed ahead of strict oldest-first order because their
 #: implementing code changed since their last driver row (rotation
 #: policy rule 1, COVERAGE.md "Rotation policy"). Empty under the
 #: operator freeze; entries need a git-blame justification.
 #:
-#: Round 13 (optimization round 2): every query whose implementing
-#: function or a kernel it calls into changed in 0849a32..HEAD —
-#: single-pass restructures (text.py: text_bigram_lm_ppl,
-#: text_pmi_bigrams, text_decontaminate; aggregates.py:
-#: agg_anomaly_mad; similarity.py: sim_matryoshka_recall), the
-#: auto-sized triangle closing join and the LPA kernel refactor
-#: (graph_ops.py: graph_triangle_count, graph_local_clustering,
-#: graph_label_propagation), the no-AQE Lloyd/PQ fit collects
-#: (kmeans.py/pq.py: sim_ivfpq_search, sim_ann_ivf_kmeans,
-#: sim_semantic_dedup, sim_pq_compress, sim_pq_adc_search), and the
-#: conf-parameterized fan-outs (statistics.py: agg_theil_sen_trend;
-#: windows.py: window_deciles). Justification per entry: git blame of
-#: the named file range against the round-12 ledger rows
-#: (CORRECTNESS_r12.json predates all of these commits).
+#: Round 14: every query whose implementing code changed after the
+#: round-13 ledger (CORRECTNESS_r13.json, commit 26c8040), in three
+#: groups. (1) The 6 queries whose same-action pin was dropped
+#: because exchange reuse already shares the subtree (operators/
+#: statistics.py, sampling.py, windows_time.py, dedup.py,
+#: etl_parity.py). (2) The 26 queries the session-neutral
+#: rewrite touched: the 11 SQL-text queries that bind frames with
+#: ``spark.sql(text, **frames)`` (sql_surface.py, aggregates.py), the
+#: 10 sink/source queries moved to ``scratch.scratch_dir`` and the 5
+#: k-means/PQ fits that lost ``no_aqe`` (kmeans.py/pq.py). (3)
+#: sim_recall_eval, whose probe-level rewrite (be9ce1c, similarity.py)
+#: postdates its newest driver row (VERDICT.md item 3). 33 entries;
+#: all fit the 50-slot prefix.
 CHANGED_FIRST_OK: set[str] = {
-    "text_bigram_lm_ppl",
-    "text_pmi_bigrams",
-    "text_decontaminate",
-    "agg_anomaly_mad",
-    "sim_matryoshka_recall",
-    "graph_triangle_count",
-    "graph_local_clustering",
-    "graph_label_propagation",
-    "sim_ivfpq_search",
-    "sim_ann_ivf_kmeans",
+    "dedup_span_extract",
+    "etl_partition_skew_audit",
+    "profile_drift_psi",
+    "stats_runs_test",
+    "time_autocorrelation",
+    "time_rolling_median",
+    "sql_shipping_priority",
+    "subquery_exists_correlated",
+    "subquery_not_in_null_semantics",
+    "sql_recursive_months",
+    "sql_pipe_syntax",
+    "sql_lateral_topn",
+    "udtf_bigram_explode",
+    "subquery_scalar_correlated",
+    "sql_udf_scalar_tvf",
+    "sql_parameterized_args",
+    "agg_grouping_sets",
+    "etl_partitioned_sink",
+    "source_json_roundtrip",
+    "source_csv_roundtrip",
+    "source_orc_roundtrip",
+    "etl_schema_evolution",
+    "source_corrupt_records",
+    "source_xml_roundtrip",
+    "source_text_lines_scan",
+    "source_binaryfile_scan",
+    "source_warc_scan",
     "sim_semantic_dedup",
+    "sim_ann_ivf_kmeans",
+    "sim_ivfpq_search",
     "sim_pq_compress",
     "sim_pq_adc_search",
-    "agg_theil_sen_trend",
-    "window_deciles",
+    "sim_recall_eval",
 }
 
 

@@ -104,6 +104,10 @@ def main() -> int:
     records: dict[str, dict] = {}
     n_green = 0
     for name, fn in qs.items():
+        # named BEFORE it runs, so Spark's own stderr lines (ERRORs
+        # logged by the JVM during the query) sit under its name
+        print(f"[{len(records) + 1}/{len(qs)}] {name}", file=sys.stderr,
+              flush=True)
         rec = {
             "rows_match": None,
             "schema_match": None,
@@ -132,9 +136,9 @@ def main() -> int:
             rec["err"] = f"{type(exc).__name__}: {exc}"[:500]
         records[name] = rec
         note_writes(name)
-        flag = "ok" if rec["err"] in (None, "no_oracle") else "RED"
-        if flag == "RED" or len(records) % 50 == 0:
-            print(f"[{len(records)}/{len(qs)}] {name}: {flag}", file=sys.stderr)
+        if rec["err"] not in (None, "no_oracle"):
+            print(f"[{len(records)}/{len(qs)}] {name}: RED", file=sys.stderr,
+                  flush=True)
 
     out = {
         "sf": float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1]),
