@@ -15,21 +15,18 @@ flagged broadcast-able so star joins never shuffle them.
 
 from __future__ import annotations
 
-import os
 import weakref
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from dataextractor_spark.session import SESSION_PINS
-
 #: Per-session memo of UNMATERIALIZED scan DataFrames, keyed
-#: (sf_dir, name, validate), plus the one-time session-conf pin. A
-#: DataFrame here is a plan, not data: every action against it still
-#: scans the parquet files, so this caches no results — it removes the
-#: ~0.12 s of file-listing + footer-schema work `spark.read.parquet`
-#: re-does per call, and the 3 py4j conf round-trips, which the bench
-#: re-paid for EVERY query × rep (~300 load_table calls per sweep).
+#: (sf_dir, name, validate). A DataFrame here is a plan, not data:
+#: every action against it still scans the parquet files, so this
+#: caches no results — it removes the ~0.12 s of file-listing +
+#: footer-schema work `spark.read.parquet` re-does per call, which the
+#: bench re-paid for EVERY query × rep (~300 load_table calls per sweep).
 #: Weakly keyed so throwaway test sessions don't pin JVM state alive.
 #: Caveat (docstring'd on load_table): within one session a table
 #: path is assumed immutable — true for the driver fixtures and the
@@ -39,6 +36,10 @@ _SCAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 )
 
 # --- explicit schema registry (FIXTURES.md §1) ---------------------------
+#
+# Timestamps are TIMESTAMP_NTZ, as the fixture files store them
+# (parquet isAdjustedToUTC=false): wall-clock values with no zone, so
+# no result depends on the reading session's timezone.
 
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
@@ -87,7 +88,7 @@ SCHEMAS: dict[str, T.StructType] = {
             T.StructField("o_custkey", T.LongType()),
             T.StructField("o_orderstatus", T.StringType()),
             T.StructField("o_totalprice", T.DoubleType()),
-            T.StructField("o_orderdate", T.TimestampType()),
+            T.StructField("o_orderdate", T.TimestampNTZType()),
             T.StructField("o_orderpriority", T.StringType()),
         ]
     ),
@@ -103,13 +104,13 @@ SCHEMAS: dict[str, T.StructType] = {
             T.StructField("l_tax", T.DoubleType()),
             T.StructField("l_returnflag", T.StringType()),
             T.StructField("l_linestatus", T.StringType()),
-            T.StructField("l_shipdate", T.TimestampType()),
+            T.StructField("l_shipdate", T.TimestampNTZType()),
         ]
     ),
     "events": T.StructType(
         [
             T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
+            T.StructField("ts", T.TimestampNTZType()),
             T.StructField("user_id", T.LongType()),
             T.StructField("event_type", T.StringType()),
             T.StructField("value", T.DoubleType()),
@@ -141,8 +142,6 @@ TABLES: tuple[str, ...] = tuple(SCHEMAS)
 #: analogue of the reference's constants dicts (opendotaapi.py:136).
 BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation"})
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 class SchemaDriftError(RuntimeError):
     """A scanned dataset no longer matches its registered schema."""
@@ -154,15 +153,9 @@ def check_schema(name: str, df: DataFrame) -> None:
     Unlike the reference (which would silently mistype — SURVEY.md §1.3)
     we fail fast with a precise diff.
     """
-    def _canon(t: str) -> str:
-        # Spark 4 reads parquet isAdjustedToUTC=false timestamps as
-        # TIMESTAMP_NTZ; with our fixed UTC session tz the two flavors
-        # are behaviorally identical, so the drift check unifies them.
-        return "timestamp" if t == "timestamp_ntz" else t
-
     expected = SCHEMAS[name]
-    got = {f.name: _canon(f.dataType.simpleString()) for f in df.schema.fields}
-    want = {f.name: _canon(f.dataType.simpleString()) for f in expected.fields}
+    got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    want = {f.name: f.dataType.simpleString() for f in expected.fields}
     if got != want:
         missing = set(want) - set(got)
         extra = set(got) - set(want)
@@ -197,35 +190,34 @@ def load_table(
     cached = state.get(key)
     if cached is not None:
         return cached
-    if not state.get("_confs_set"):
-        # Results must not depend on the caller's session (the driver
-        # harness builds its own): apply the session pins, once per
-        # session. Nothing in-repo unpins them after.
-        for k, v in SESSION_PINS.items():
-            spark.conf.set(k, v)
-        # events.ts nanos handling (see the events branch below) must
-        # be on before the first events read; harmless for µs files.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        state["_confs_set"] = True
     path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        # events.ts has shipped as both parquet TIMESTAMP(NANOS) (which
-        # Spark 4 refuses to read natively — the legacy conf, set with
-        # the session pins above, surfaces it as raw int64 nanos) and
-        # plain TIMESTAMP(MICROS), depending on the fixture generator
-        # version. Handle both: branch on the surfaced type. The nanos
-        # branch converts losslessly with integer division — int64
-        # `div` avoids the double-mantissa precision loss a float
-        # division would introduce; the native branch just normalizes
-        # NTZ → session-tz timestamp (session tz is pinned UTC above,
-        # so the wall-clock values are identical).
+    try:
         df = spark.read.parquet(path)
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    else:
-        df = spark.read.parquet(path)
+    except AnalysisException as e:
+        # events.ts has shipped as parquet TIMESTAMP(NANOS) as well as
+        # TIMESTAMP(MICROS), depending on the fixture generator version.
+        # Spark reads NANOS neither as a timestamp nor, without a
+        # session conf, by inference: schema inference fails with
+        # PARQUET_TYPE_ILLEGAL. Read with the registry schema and ts
+        # declared BIGINT, which loads the raw int64 nanos, then convert
+        # with NTZ arithmetic: integer `div` keeps every microsecond
+        # exactly (a float division would not), and adding to the NTZ
+        # epoch involves no zone.
+        if name != "events" or e.getCondition() != "PARQUET_TYPE_ILLEGAL":
+            raise
+        raw = T.StructType(
+            [
+                T.StructField("ts", T.LongType()) if f.name == "ts" else f
+                for f in SCHEMAS[name].fields
+            ]
+        )
+        df = spark.read.schema(raw).parquet(path).withColumn(
+            "ts",
+            F.expr(
+                "timestampadd(MICROSECOND, ts div 1000, "
+                "TIMESTAMP_NTZ'1970-01-01 00:00:00')"
+            ),
+        )
     if validate:
         check_schema(name, df)
     if name in BROADCAST_DIMS:

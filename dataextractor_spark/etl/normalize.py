@@ -151,7 +151,13 @@ def with_local_date(
 ) -> DataFrame:
     """UTC timestamp column → local wall-clock time + derived date
     partition key (A7/A8 parity: opendotaapi.py:114-116) — but as a
-    real partition column for write.partitionBy, not a filename."""
+    real partition column for write.partitionBy, not a filename.
+
+    ``ts_col`` is an instant (TIMESTAMP). The local time comes back as
+    TIMESTAMP_NTZ and the key as its ``yyyy-MM-dd`` date, both derived
+    without the session timezone: the instant's UTC wall clock is the
+    epoch NTZ plus its microseconds, ``convert_timezone`` moves that
+    wall clock to ``tz``, and the date is a plain NTZ → DATE cast."""
     clash = {local_col, date_col} & set(df.columns)
     if clash:
         raise ValueError(
@@ -159,7 +165,11 @@ def with_local_date(
             "withColumn would silently replace them; pass different "
             "local_col/date_col names"
         )
-    local = F.from_utc_timestamp(F.col(ts_col), tz)
+    utc_wall = F.expr(
+        f"timestampadd(MICROSECOND, unix_micros(`{ts_col}`), "
+        "TIMESTAMP_NTZ'1970-01-01 00:00:00')"
+    )
+    local = F.convert_timezone(F.lit("UTC"), F.lit(tz), utc_wall)
     return df.withColumn(local_col, local).withColumn(
-        date_col, F.date_format(local, "yyyy-MM-dd")
+        date_col, local.cast("date").cast("string")
     )

@@ -1361,8 +1361,20 @@ def agg_regression_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-cardinality key, output bounded by group count at any fact
     volume; no window, no second pass. Slope/R² round at 6 dp so the
     two engines' accumulation orders can't flip the hash."""
-    e = load_table(spark, sf_dir, "events")
-    x = F.unix_micros("ts") / F.lit(86_400_000_000.0)
+    # x is projected once: the three regr_* aggregates read it several
+    # times per row each, and an inline timestampdiff runs per read
+    # (0.71 s against 0.21 s at sf0.1).
+    e = load_table(spark, sf_dir, "events").select(
+        "event_type",
+        "value",
+        (
+            F.expr(
+                "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
+            )
+            / F.lit(86_400_000_000.0)
+        ).alias("x"),
+    )
+    x = F.col("x")
     return (
         e.groupBy("event_type")
         .agg(

@@ -30,7 +30,14 @@ def _ord():
     order equals event-time order, ties impossible (event_id unique).
     Built lazily: column construction needs an active session."""
     return F.concat(
-        F.lpad(F.unix_micros(F.col("ts")).cast("string"), 20, "0"),
+        F.lpad(
+            F.expr(
+                "CAST(timestampdiff(MICROSECOND, "
+                "TIMESTAMP_NTZ'1970-01-01 00:00:00', ts) AS STRING)"
+            ),
+            20,
+            "0",
+        ),
         F.lpad(F.col("event_id").cast("string"), 12, "0"),
     )
 _ORD_SQL = (
@@ -1277,7 +1284,7 @@ def time_dormancy_reactivation(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = e.select(
         "user_id", "ts", F.lag("ts").over(w).alias("prev_ts")
     )
-    gap_us = F.unix_micros("ts") - F.unix_micros("prev_ts")
+    gap_us = F.timestamp_diff("MICROSECOND", "prev_ts", "ts")
     is_react = F.when(
         F.col("prev_ts").isNotNull()
         & (F.col("ts") >= F.col("prev_ts") + F.expr("INTERVAL 7 DAYS")),
@@ -1468,10 +1475,8 @@ def funnel_step_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ts").alias("t_purchase"),
         )
     )
-    lat_vc = F.unix_micros(F.col("t_click")) - F.unix_micros(F.col("t_view"))
-    lat_cp = F.unix_micros(F.col("t_purchase")) - F.unix_micros(
-        F.col("t_click")
-    )
+    lat_vc = F.timestamp_diff("MICROSECOND", "t_view", "t_click")
+    lat_cp = F.timestamp_diff("MICROSECOND", "t_click", "t_purchase")
     vc = c.agg(
         F.count(F.lit(1)).cast("long").alias("n_vc"),
         F.sum(lat_vc).cast("long").alias("s_vc"),

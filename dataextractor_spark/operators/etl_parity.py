@@ -138,8 +138,9 @@ def etl_epoch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("event_id") < 200)
         .select(
             epoch_s,
-            F.date_format(
-                F.timestamp_seconds(F.unix_timestamp("ts")), "yyyy-MM-dd HH:mm:ss"
+            F.expr(
+                "date_format(timestampadd(SECOND, unix_timestamp(ts), "
+                "TIMESTAMP_NTZ'1970-01-01 00:00:00'), 'yyyy-MM-dd HH:mm:ss')"
             ).alias("ts_rt"),
             "event_id",
         )

@@ -215,11 +215,11 @@ def join_asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle stays the equivalent greatest-lower-bound aggregate.
     """
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    # Cast the order date to timestamp (midnight, session tz) so both
-    # sides share one _ts axis — same implicit cast the range form used.
+    # ts and o_orderdate are both TIMESTAMP_NTZ, so both sides share one
+    # _ts axis with no cast (and no session timezone).
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.col("o_orderdate").cast("timestamp").alias("o_ts"),
+        F.col("o_orderdate").alias("o_ts"),
         "o_orderdate",
     )
     return (
@@ -777,7 +777,7 @@ def join_asof_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("next_pts")
             <= F.col("ts") + F.expr("INTERVAL 72 HOURS")
         ),
-        (F.unix_micros("next_pts") - F.unix_micros("ts")) / 3600000000.0,
+        F.timestamp_diff("MICROSECOND", "ts", "next_pts") / 3600000000.0,
     )
     return (
         carried.select(
@@ -881,7 +881,7 @@ def join_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 2).alias("sum_value"),
             F.round(
                 F.avg(
-                    (F.unix_micros("p_ts") - F.unix_micros("valid_from"))
+                    F.timestamp_diff("MICROSECOND", "valid_from", "p_ts")
                     / F.lit(3600000000.0)
                 ),
                 6,
@@ -989,26 +989,28 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(pts).over(wb).alias("prev_pts"),
         F.min(pts).over(wf).alias("next_pts"),
     ).filter(F.col("event_type") == "click")
-    us = F.unix_micros
+    def us(a: str, b: str):  # microseconds from a to b (NTZ: no zone)
+        return F.timestamp_diff("MICROSECOND", F.col(a), F.col(b))
+
     near = (
         F.when(
             F.col("prev_pts").isNull() & F.col("next_pts").isNull(),
-            F.lit(None).cast("timestamp"),
+            F.lit(None).cast("timestamp_ntz"),
         )
         .when(F.col("next_pts").isNull(), F.col("prev_pts"))
         .when(F.col("prev_pts").isNull(), F.col("next_pts"))
         .when(
-            us("ts") - us("prev_pts") <= us("next_pts") - us("ts"),
+            us("prev_pts", "ts") <= us("ts", "next_pts"),
             F.col("prev_pts"),
         )
         .otherwise(F.col("next_pts"))
     )
     picked = carried.select("ts", near.alias("near_pts"))
     in_tol = F.col("near_pts").isNotNull() & (
-        F.abs(us("ts") - us("near_pts")) <= F.lit(86_400_000_000)
+        F.abs(us("near_pts", "ts")) <= F.lit(86_400_000_000)
     )
     hours = F.when(
-        in_tol, F.abs(us("ts") - us("near_pts")) / 3600000000.0
+        in_tol, F.abs(us("near_pts", "ts")) / 3600000000.0
     )
     direction = F.when(
         in_tol,

@@ -772,14 +772,14 @@ def sample_temporal_split_embargo(spark: SparkSession, sf_dir: str) -> DataFrame
     the broadcast bounds row; the distinct-train-users table is
     user-bounded and broadcast into the left join; two bounded hash
     aggregates. No sort, no window."""
-    e = load_table(spark, sf_dir, "events")
-    b = F.broadcast(
-        e.agg(
-            F.min(F.unix_micros("ts")).alias("lo"),
-            F.max(F.unix_micros("ts")).alias("hi"),
-        )
+    e = load_table(spark, sf_dir, "events").select(
+        "user_id",
+        F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
+        ).alias("us"),
     )
-    lab = e.select("user_id", F.unix_micros("ts").alias("us")).crossJoin(b)
+    b = F.broadcast(e.agg(F.min("us").alias("lo"), F.max("us").alias("hi")))
+    lab = e.crossJoin(b)
     # floor() EXPLICITLY on both sides: DuckDB CAST(x AS BIGINT) rounds
     # to nearest while Spark .cast('long') truncates — at the shipped
     # fixtures the fractional part is 0.6, so without the floor the two

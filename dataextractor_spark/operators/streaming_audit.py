@@ -206,7 +206,7 @@ def stage_arrival_replay(
             "value double, props string",
         ).select(
             "event_id",
-            F.lit(sentinel_ts_for(events)).cast("timestamp").alias("ts"),
+            F.lit(sentinel_ts_for(events)).cast("timestamp_ntz").alias("ts"),
             "user_id",
             "event_type",
             "value",
@@ -395,9 +395,9 @@ def streaming_watermark_frontier(
         wm.join(cls, "batch_id")
         .select(
             "batch_id",
-            F.date_format(
-                F.timestamp_seconds(F.col("batch_id") * BATCH_S),
-                "yyyy-MM-dd HH:mm:ss",
+            F.expr(
+                f"date_format(timestampadd(SECOND, batch_id * {BATCH_S}, "
+                "TIMESTAMP_NTZ'1970-01-01 00:00:00'), 'yyyy-MM-dd HH:mm:ss')"
             ).alias("batch_start"),
             "n_events",
             F.date_format("bmax", "yyyy-MM-dd HH:mm:ss").alias(
@@ -913,7 +913,9 @@ def _sessions_from_ann(ann: DataFrame) -> DataFrame:
     ).select(
         "user_id",
         "event_id",
-        F.unix_micros("ts").alias("tus"),
+        F.expr(
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
+        ).alias("tus"),
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     w = Window.partitionBy("user_id").orderBy("tus", "event_id")
@@ -1039,9 +1041,10 @@ def streaming_session_state_audit(
         .agg(F.count(F.lit(1)).cast("long").alias("n_dropped_late"))
     )
     byday = sess.groupBy(
-        F.date_format(F.timestamp_micros("start_us"), "yyyy-MM-dd").alias(
-            "day"
-        )
+        F.expr(
+            "date_format(timestampadd(MICROSECOND, start_us, "
+            "TIMESTAMP_NTZ'1970-01-01 00:00:00'), 'yyyy-MM-dd')"
+        ).alias("day")
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n_sessions"),
         F.sum("n").cast("long").alias("n_events_kept"),

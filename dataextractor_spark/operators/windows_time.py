@@ -443,7 +443,7 @@ def time_scd2_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_current"),
         F.round(
             F.avg(
-                (F.unix_micros("valid_to") - F.unix_micros("ts"))
+                F.timestamp_diff("MICROSECOND", "ts", "valid_to")
                 / F.lit(3600000000.0)
             ),
             6,
@@ -1480,7 +1480,8 @@ def _acf_sql() -> str:
     ),
     lags AS (SELECT unnest(range(1, {_ACF_MAX_LAG + 1})) AS lag),
     pairs AS (
-        SELECT l.lag, a.dollars AS x, b.dollars AS y
+        SELECT l.lag, CAST(a.dollars AS HUGEINT) AS x,
+               CAST(b.dollars AS HUGEINT) AS y
         FROM lags l
         JOIN daily a ON TRUE
         JOIN daily b ON b.d = a.d + l.lag
@@ -1488,11 +1489,8 @@ def _acf_sql() -> str:
     s AS (
         SELECT lag,
                CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(x) AS BIGINT) AS sx,
-               CAST(sum(y) AS BIGINT) AS sy,
-               CAST(sum(x * x) AS BIGINT) AS sxx,
-               CAST(sum(y * y) AS BIGINT) AS syy,
-               CAST(sum(x * y) AS BIGINT) AS sxy
+               sum(x) AS sx, sum(y) AS sy,
+               sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy
         FROM pairs GROUP BY lag
     )
     SELECT CAST(lag AS BIGINT) AS lag, n AS n_pairs,
@@ -1516,15 +1514,16 @@ def time_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pearson at each lag over the lag-aligned day pairs (the
     statistics literature's acf-with-pairwise-complete convention),
-    every moment an exact BIGINT sum: the daily aggregate is
+    every moment an exact DECIMAL(38,0) sum (HUGEINT in the oracle):
+    the daily aggregate is
     calendar-bounded, the 14-row lag spine broadcasts, and the
     self-alignment is one day+lag equi-join — so the whole plan is
     independent of fact-table size after the first day-keyed
     aggregate. r is a fixed double expression, rounded 6dp. The
-    series is integer DOLLARS, not dollars: sum(x·x) over ~2400 daily
-    values peaks ~5e17 at sf0.1 — inside int64; dollars squared would
-    overflow already at sf0.01 (the agg_hhi_concentration headroom
-    argument, applied at the square)."""
+    series is integer DOLLARS: sum(x·x) over ~2400 daily values peaks
+    ~5e17 at sf0.1, and at 8× the fixture it passes int64 (64 × 5e17),
+    so the moments sum as 38-digit decimals, exact far past any scale
+    the repo runs."""
     o = load_table(spark, sf_dir, "orders")
     daily = (
         o.groupBy(
@@ -1542,8 +1541,9 @@ def time_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     lags = F.broadcast(
         spark.range(1, _ACF_MAX_LAG + 1).select(F.col("id").alias("lag"))
     )
-    a = daily.select(F.col("d").alias("da"), F.col("dollars").alias("x"))
-    b = daily.select(F.col("d").alias("db"), F.col("dollars").alias("y"))
+    dollars = F.col("dollars").cast("decimal(38,0)")
+    a = daily.select(F.col("d").alias("da"), dollars.alias("x"))
+    b = daily.select(F.col("d").alias("db"), dollars.alias("y"))
     pairs = (
         a.crossJoin(lags)
         .join(b, F.col("db") == F.col("da") + F.col("lag"))
@@ -1551,11 +1551,11 @@ def time_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = pairs.groupBy("lag").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+        F.sum("x").alias("sx"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x") * F.col("x")).alias("sxx"),
+        F.sum(F.col("y") * F.col("y")).alias("syy"),
+        F.sum(F.col("x") * F.col("y")).alias("sxy"),
     )
     d = lambda c: F.col(c).cast("double")  # noqa: E731
     return s.select(
@@ -1716,7 +1716,7 @@ def time_interevent_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps = e.select(
         "user_id",
         (
-            (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w)))
+            F.timestamp_diff("MICROSECOND", F.lag("ts").over(w), "ts")
             / 1000000
         )
         .cast("long")

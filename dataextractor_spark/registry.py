@@ -64,48 +64,38 @@ PRIORITY_ORDER: tuple[str, ...] = (
     # round. Tail stays sorted so future windows are pre-staged
     # (CI: tests/test_plans.py
     # test_priority_order_follows_rotation_policy).
-    "dedup_span_extract",  # changed-first (rule 1)
-    "etl_partition_skew_audit",  # changed-first (rule 1)
-    "profile_drift_psi",  # changed-first (rule 1)
-    "stats_runs_test",  # changed-first (rule 1)
+    "rest_publicmatches_pipeline",  # changed-first (rule 1)
+    "etl_epoch_roundtrip",  # changed-first (rule 1)
+    "time_tumbling_window",  # changed-first (rule 1)
+    "agg_regression_trend",  # changed-first (rule 1)
+    "streaming_watermark_frontier",  # changed-first (rule 1)
+    "streaming_dedup_replay_audit",  # changed-first (rule 1)
+    "text_winnow_fingerprint",  # changed-first (rule 1)
     "time_autocorrelation",  # changed-first (rule 1)
-    "time_rolling_median",  # changed-first (rule 1)
-    "sql_shipping_priority",  # changed-first (rule 1)
-    "subquery_exists_correlated",  # changed-first (rule 1)
-    "subquery_not_in_null_semantics",  # changed-first (rule 1)
-    "sql_recursive_months",  # changed-first (rule 1)
-    "sql_pipe_syntax",  # changed-first (rule 1)
-    "sql_lateral_topn",  # changed-first (rule 1)
-    "udtf_bigram_explode",  # changed-first (rule 1)
-    "subquery_scalar_correlated",  # changed-first (rule 1)
-    "sql_udf_scalar_tvf",  # changed-first (rule 1)
-    "sql_parameterized_args",  # changed-first (rule 1)
-    "agg_grouping_sets",  # changed-first (rule 1)
-    "etl_partitioned_sink",  # changed-first (rule 1)
-    "source_json_roundtrip",  # changed-first (rule 1)
-    "source_csv_roundtrip",  # changed-first (rule 1)
-    "source_orc_roundtrip",  # changed-first (rule 1)
-    "etl_schema_evolution",  # changed-first (rule 1)
-    "source_corrupt_records",  # changed-first (rule 1)
-    "source_xml_roundtrip",  # changed-first (rule 1)
-    "source_text_lines_scan",  # changed-first (rule 1)
-    "source_binaryfile_scan",  # changed-first (rule 1)
-    "source_warc_scan",  # changed-first (rule 1)
-    "sim_semantic_dedup",  # changed-first (rule 1)
-    "sim_ann_ivf_kmeans",  # changed-first (rule 1)
-    "sim_ivfpq_search",  # changed-first (rule 1)
-    "sim_pq_compress",  # changed-first (rule 1)
-    "sim_pq_adc_search",  # changed-first (rule 1)
-    "sim_recall_eval",  # changed-first (rule 1)
+    "join_asof_latest_order",  # changed-first (rule 1)
+    "join_salted_skew",  # changed-first (rule 1)
+    "time_session_window",  # changed-first (rule 1)
+    "funnel_step_latency",  # changed-first (rule 1)
+    "time_dormancy_reactivation",  # changed-first (rule 1)
+    "join_cdc_apply",  # changed-first (rule 1)
+    "join_asof_nearest",  # changed-first (rule 1)
+    "join_asof_next_purchase",  # changed-first (rule 1)
+    "join_scd2_point_in_time",  # changed-first (rule 1)
+    "sample_temporal_split_embargo",  # changed-first (rule 1)
+    "streaming_session_state_audit",  # changed-first (rule 1)
+    "time_interevent_gaps",  # changed-first (rule 1)
+    "time_scd2_versions",  # changed-first (rule 1)
     # -- latest driver row r7 --
     "agg_mcnemar_paired",
     "agg_capture_recapture",
     "stats_cochran_q",
     "etl_calendar_coverage_audit",
-    "join_asof_latest_order",
     # -- latest driver row r8 --
+    "dedup_span_extract",
+    "udtf_bigram_explode",
+    "subquery_scalar_correlated",
+    "source_corrupt_records",
     "multimodal_jpeg_codec",
-    "join_salted_skew",
     "dedup_exact",
     "dedup_canonical_pick",
     "dedup_jaccard_pairs",
@@ -145,6 +135,12 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "join_range_bucketed",
     "sort_limit_topk",
     # -- latest driver row r9 --
+    "profile_drift_psi",
+    "agg_grouping_sets",
+    "etl_partitioned_sink",
+    "source_json_roundtrip",
+    "source_csv_roundtrip",
+    "etl_schema_evolution",
     "union_except_intersect",
     "sample_stratified",
     "profile_table",
@@ -153,7 +149,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "dedup_fuzzy_names",
     "agg_ks_drift",
     "text_source_vocab_overlap",
-    "join_asof_next_purchase",
     "agg_weighted_median",
     "text_bm25_search",
     "scalar_bitwise_funcs",
@@ -178,7 +173,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "agg_conditional_filter",
     "agg_string_listagg",
     "agg_corr_covar",
-    "etl_epoch_roundtrip",
     "scalar_map_funcs",
     "point_lookup_by_key",
     "join_stream_dim_enrich",
@@ -190,11 +184,16 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "sim_knn_batch",
     "sim_neardup_pairs",
     # -- latest driver row r10 --
+    "sql_shipping_priority",
+    "subquery_exists_correlated",
+    "subquery_not_in_null_semantics",
+    "sql_recursive_months",
+    "sql_pipe_syntax",
+    "sql_lateral_topn",
     "sim_ann_lsh",
     "sim_label_centroids",
     "text_zipf_slope",
     "window_first_last_nth",
-    "time_scd2_versions",
     "rest_datasource_scan",
     "scalar_json_funcs",
     "multimodal_resize",
@@ -204,21 +203,17 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "text_langid_heuristic",
     "text_fingerprint",
     "text_bigram_top20",
-    "text_winnow_fingerprint",
     "text_tfidf_top_terms",
     "text_pack_sequences",
     "window_rank_topn",
     "window_running_sum",
     "window_moving_avg",
     "window_percent_rank_cume",
-    "time_tumbling_window",
     "time_sliding_window",
-    "time_session_window",
     "time_user_activity",
     "time_gapfill_locf",
     "time_trailing_week_revenue",
     "time_cohort_retention",
-    "rest_publicmatches_pipeline",
     "pivot_unpivot_roundtrip",
     "udf_zscore_median",
     "scalar_string_funcs",
@@ -235,7 +230,8 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "window_pctrank_cumedist",
     "funnel_conversion",
     # -- latest driver row r11 --
-    "join_cdc_apply",
+    "source_orc_roundtrip",
+    "sim_recall_eval",
     "time_changepoint_cusum",
     "time_markov_transitions",
     "agg_argmax_minby",
@@ -245,15 +241,11 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "pretrain_corpus_recipe",
     "agg_approx_percentile",
     "time_interpolate_linear",
-    "sample_temporal_split_embargo",
     "dedup_shingle_containment",
     "time_sliding_distinct_users",
     "time_ewma_smooth",
-    "join_scd2_point_in_time",
     "agg_countmin_heavyhitters",
     "etl_snapshot_diff",
-    "agg_regression_trend",
-    "join_asof_nearest",
     "text_url_canonicalize",
     "time_session_paths",
     "agg_histogram_quantile_sketch",
@@ -273,10 +265,13 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "sim_mmr_diversify",
     "multimodal_png_codec",
     "streaming_late_discard_audit",
-    "streaming_watermark_frontier",
-    "streaming_dedup_replay_audit",
     "streaming_join_state_audit",
     # -- latest driver row r12 --
+    "etl_partition_skew_audit",
+    "sql_udf_scalar_tvf",
+    "source_xml_roundtrip",
+    "source_binaryfile_scan",
+    "source_warc_scan",
     "graph_link_prediction",
     "ab_cuped_adjustment",
     "stats_anova_oneway",
@@ -284,7 +279,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "sim_embedding_drift",
     "text_quality_threshold_sweep",
     "graph_kcore_decomposition",
-    "funnel_step_latency",
     "attr_position_weighted",
     "time_concurrency_peak",
     "sample_bootstrap_ci",
@@ -314,15 +308,22 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "agg_seasonality_strength",
     "join_basket_affinity",
     "time_new_vs_returning",
-    "time_dormancy_reactivation",
     "agg_reorder_rate",
     "time_active_streaks",
-    "streaming_session_state_audit",
     "stats_ttest_welch",
     "stats_mann_whitney_u",
     "stats_spearman_corr",
     "scalar_variant_funcs",
     # -- latest driver row r13 --
+    "stats_runs_test",
+    "time_rolling_median",
+    "sql_parameterized_args",
+    "source_text_lines_scan",
+    "sim_semantic_dedup",
+    "sim_ann_ivf_kmeans",
+    "sim_ivfpq_search",
+    "sim_pq_compress",
+    "sim_pq_adc_search",
     "text_bigram_lm_ppl",
     "text_pmi_bigrams",
     "text_decontaminate",
@@ -360,7 +361,6 @@ PRIORITY_ORDER: tuple[str, ...] = (
     "stats_brown_forsythe",
     "udf_arrow_map_tokencount",
     "sql_observe_metrics",
-    "time_interevent_gaps",
     "text_vocab_growth",
     "stats_wilcoxon_signed_rank",
 )

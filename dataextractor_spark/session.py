@@ -4,8 +4,12 @@ The reference runs a single eager process (extract-data-dota.py:112-209);
 our engine's unit of execution is a SparkSession configured for a large
 cluster: AQE (runtime re-planning, skew-join splitting, partition
 coalescing), sensible shuffle parallelism, Arrow transfers for the
-Python boundary, and a fixed UTC session timezone so event-time results
-are deterministic across environments.
+Python boundary. It sets no session timezone and excludes no optimizer
+rule: the catalog hands out timestamps as TIMESTAMP_NTZ and every query
+states its time arithmetic without a zone, so results are the same in
+any session. (Spark's ``date_trunc``/``date_format`` still cast an NTZ
+value through the session zone, so a wall-clock time inside that zone's
+spring-forward gap would shift by the gap; no fixture time falls in one.)
 
 Spark's Python workers are forked from ``dataextractor_spark.pydaemon``
 (``spark.python.daemon.module``) rather than ``pyspark.daemon``. It runs
@@ -24,29 +28,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-#: Conf pins that results depend on, applied by ``get_session`` and
-#: again by ``catalog.load_table`` (the external driver builds its own
-#: session, and load_table is the mandatory first touch of any data).
-#:
-#: - UTC timezone: epoch math and date_format over LTZ timestamps read
-#:   the session tz, so results must not depend on the caller's.
-#: - InferFiltersFromGenerate excluded (SPARK-36715 family): the rule
-#:   synthesizes `size(arr) > 0` above an explode; predicate pushdown
-#:   then inlines the array expression into the scan filter with every
-#:   attribute reference substituted by its defining expression. For
-#:   higher-order-function pipelines (transform over transform, e.g.
-#:   winnowing fingerprints) that substitution re-evaluates inner
-#:   arrays per lambda element — O(len^2+) per row, a measured 23x
-#:   slowdown at sf0.1. explode() already emits nothing for empty
-#:   arrays, so the inferred filter only ever saves the per-row empty
-#:   check; dropping the rule is strictly safe.
-SESSION_PINS = {
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.optimizer.excludedRules": (
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-    ),
-}
 
 
 def get_session(
@@ -84,7 +65,7 @@ def get_session(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
-    for k, v in {**SESSION_PINS, **(extra_conf or {})}.items():
+    for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -76,7 +76,7 @@ def stage_stream_input(
             "event_id long, user_id long, event_type string, value double, props string",
         ).select(
             "event_id",
-            F.lit(sentinel_ts_for(events)).cast("timestamp").alias("ts"),
+            F.lit(sentinel_ts_for(events)).cast("timestamp_ntz").alias("ts"),
             "user_id",
             "event_type",
             "value",
@@ -89,12 +89,22 @@ def stage_stream_input(
 def events_stream(
     spark: SparkSession, staged_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
-    """File-source stream with the catalog's explicit events schema
-    (ts already normalized to µs by the staging write)."""
+    """File-source stream with the catalog's explicit events schema.
+
+    A watermark needs its event time as an instant (TIMESTAMP), so the
+    catalog's TIMESTAMP_NTZ ``ts`` (a UTC wall clock) becomes the instant
+    at that wall clock: the epoch instant plus the NTZ distance from the
+    NTZ epoch, arithmetic that reads no session timezone."""
     return (
         spark.readStream.schema(SCHEMAS["events"])
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(staged_dir)
+        .withColumn(
+            "ts",
+            F.expr(
+                "timestamp_micros(0) + (ts - TIMESTAMP_NTZ'1970-01-01 00:00:00')"
+            ),
+        )
     )
 
 

@@ -53,3 +53,31 @@ def test_dim_broadcast_hint_attached(spark):
     c = load_table(spark, SF_SMALL, "customer")
     plan = physical_plan(c.join(n, c.c_nationkey == n.n_nationkey), "simple")
     assert "BroadcastHashJoin" in plan
+
+
+@pytest.mark.parametrize("unit", ["us", "ns"])
+def test_events_ts_units_load_alike(spark, tmp_path, unit):
+    """events.ts has shipped as parquet TIMESTAMP(MICROS) and
+    TIMESTAMP(NANOS). A copy of the fixture written in either unit must
+    load as TIMESTAMP_NTZ with the fixture's exact ts values, without
+    a write to the session's conf."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{SF_SMALL}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t["ts"].cast(pa.timestamp(unit)))
+    pq.write_table(t, tmp_path / "events.parquet")
+    assert pq.read_schema(tmp_path / "events.parquet").field("ts").type == (
+        pa.timestamp(unit)
+    )
+
+    s = spark.newSession()
+    conf0 = s.conf.getAll
+    got = load_table(s, str(tmp_path), "events")
+    want = load_table(s, SF_SMALL, "events")
+    assert got.schema["ts"].dataType.simpleString() == "timestamp_ntz"
+    assert sorted(got.select("event_id", "ts").collect()) == sorted(
+        want.select("event_id", "ts").collect()
+    )
+    assert s.conf.getAll == conf0

@@ -58,15 +58,11 @@ def test_two_threads_leave_session_as_found(spark):
     opposite orders. Every result must still be right (oracled ones
     against DuckDB, rows-only ones against a sequential run in the same
     session), and afterwards the session's conf and table/view list
-    must equal the snapshot taken once ``load_table`` applied its pins,
-    the one sanctioned conf write."""
+    must equal the snapshot taken before any table was loaded."""
     from concurrent.futures import ThreadPoolExecutor
-
-    from dataextractor_spark.catalog import load_table
 
     s = spark.newSession()
     s.conf.set("spark.sql.session.timeZone", "America/New_York")
-    load_table(s, SF_ORACLE, "orders")
     conf0 = s.conf.getAll
     tables0 = sorted((t.name, t.isTemporary) for t in s.catalog.listTables())
 
@@ -92,6 +88,40 @@ def test_two_threads_leave_session_as_found(spark):
     assert sorted(
         (t.name, t.isTemporary) for t in s.catalog.listTables()
     ) == tables0
+
+
+#: the queries whose rows followed the session timezone once the
+#: catalog stopped pinning it to UTC; rest_publicmatches_pipeline
+#: loads no catalog table, so it runs first, in an untouched session
+TZ_QUERIES = (
+    "rest_publicmatches_pipeline",
+    "etl_epoch_roundtrip",
+    "time_tumbling_window",
+    "agg_regression_trend",
+    "streaming_watermark_frontier",
+    "streaming_dedup_replay_audit",
+)
+
+
+def test_results_do_not_depend_on_session_timezone(spark):
+    """Fresh sessions in UTC, America/New_York and Asia/Kolkata run
+    TZ_QUERIES in order. Oracled queries must match DuckDB, rows-only
+    ones must equal the UTC session's rows, and each session's conf
+    must be the same after the queries as before them."""
+    utc_rows = {}
+    for tz in ("UTC", "America/New_York", "Asia/Kolkata"):
+        s = spark.newSession()
+        s.conf.set("spark.sql.session.timeZone", tz)
+        conf0 = s.conf.getAll
+        for name in TZ_QUERIES:
+            spec = SPECS[name]
+            df = spec.fn(s, SF_ORACLE)
+            if spec.oracle:
+                compare_to_oracle(df, spec.oracle, SF_ORACLE)
+                continue
+            rows = sorted(map(tuple, df.collect()))
+            assert rows == utc_rows.setdefault(name, rows), (tz, name)
+        assert s.conf.getAll == conf0, tz
 
 
 def test_entry_smoke(spark):

@@ -2485,7 +2485,12 @@ def test_interevent_gaps_matches_bruteforce(spark):
 
     ev = (
         load_table(spark, SF_SMALL, "events")
-        .selectExpr("user_id", "unix_micros(ts) AS us", "event_id")
+        .selectExpr(
+            "user_id",
+            "timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)"
+            " AS us",
+            "event_id",
+        )
         .collect()
     )
     per = defaultdict(list)

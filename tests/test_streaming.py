@@ -280,8 +280,14 @@ def test_events_replay_datasource_full_drain(spark):
     # table (ts_ns is epoch-nanos; catalog converts via micros)
     b = batch.agg(
         F.round(F.sum("value"), 2).alias("s"),
-        F.min(F.unix_micros("ts")).alias("lo"),
-        F.max(F.unix_micros("ts")).alias("hi"),
+        F.expr(
+            "min(timestampdiff(MICROSECOND, "
+            "TIMESTAMP_NTZ'1970-01-01 00:00:00', ts))"
+        ).alias("lo"),
+        F.expr(
+            "max(timestampdiff(MICROSECOND, "
+            "TIMESTAMP_NTZ'1970-01-01 00:00:00', ts))"
+        ).alias("hi"),
     ).first()
     s = got.agg(
         F.round(F.sum("value"), 2).alias("s"),

@@ -45,9 +45,11 @@ def main() -> int:
         print(f"not in GOLDEN_QUERIES: {unknown}", file=sys.stderr)
         return 1
 
+    from tests.conftest import SESSION_TZ
+
     spark = get_session(
         app_name="capture-plan-goldens", master="local[8]",
-        shuffle_partitions=8,
+        shuffle_partitions=8, extra_conf=SESSION_TZ,
     )
     queries = load_all()
     GOLDEN_DIR.mkdir(parents=True, exist_ok=True)

@@ -17,8 +17,9 @@ After ``entry()`` and after each query the sweep also diffs the
 session's state: conf entries, temp views, user functions and
 registered data sources. Whatever a step added or changed is listed
 under ``session_writes`` in the header and in the printed summary, so
-a query that quietly writes to the caller's session shows up by name
-(``entry`` carries ``catalog.load_table``'s once-per-session pins).
+a query that quietly writes to the caller's session shows up by name.
+Only three queries register what they exist to show; ``entry`` and
+every other query leave the session as they found it.
 
     python tools/driver_sim.py 12            # writes DRIVER_SIM_r12.json
     python tools/driver_sim.py 12 --dry-run  # run + print, write nothing
