@@ -11,9 +11,11 @@ The same layout serves repeated aggregations on the bucket key.
 from __future__ import annotations
 
 import os
-import shutil
+import re
 
 from pyspark.sql import DataFrame, SparkSession
+
+from dataextractor_spark.scratch import scratch_dir
 
 
 def write_bucketed(
@@ -24,31 +26,27 @@ def write_bucketed(
     *,
     sort_key: str | None = None,
 ) -> None:
-    """Persist as a bucketed (+ optionally sorted) managed table.
+    """Persist as a bucketed (+ optionally sorted) external table.
     Sorting within buckets additionally lets sort-merge joins skip
-    their sort step."""
-    import re
+    their sort step.
 
-    # the name is spliced into SQL AND into a filesystem path that is
-    # rmtree'd — restrict to a plain identifier so a hostile/typo'd
-    # name (backticks, '../..') can't escape either context
+    The files go to a fresh per-call ``scratch.scratch_dir``, not the
+    session's shared warehouse: each call re-points ``table`` at its own
+    directory, so two runs from one working directory never share a
+    location, and a DataFrame read after an earlier call keeps scanning
+    that call's files."""
+    # the name becomes a table identifier AND a directory name —
+    # restrict to a plain identifier so a hostile/typo'd name
+    # (backticks, '../..') can't escape either context
     if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", table):
         raise ValueError(
             f"table must be a plain SQL identifier, got {table!r}"
         )
-    spark = df.sparkSession
-    # overwrite of a managed table can't adopt an orphaned location
-    # (e.g. a warehouse dir left by a previous session) — clear both
-    # the catalog entry and the directory first.
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    loc = os.path.join(warehouse.removeprefix("file:"), table.lower())
-    if os.path.isdir(loc):
-        shutil.rmtree(loc, ignore_errors=True)
     w = df.write.mode("overwrite").bucketBy(n_buckets, bucket_key)
     if sort_key is not None:
         w = w.sortBy(sort_key)
-    w.format("parquet").saveAsTable(table)
+    path = os.path.join(scratch_dir(f"bucketed-{table}-"), table)
+    w.format("parquet").option("path", path).saveAsTable(table)
 
 
 def read_bucketed(spark: SparkSession, table: str) -> DataFrame:

@@ -18,6 +18,16 @@ unchanged ``pyspark.zip`` directory, about 0.15 s per task on CPython
 3.10/3.11 (see that module). Workers must be able to import this
 package, which the engine's UDFs, pickled by reference, already need.
 
+Spark keeps one daemon, with its own pool of workers, per distinct
+worker environment. SQL Python runners (pandas and Python UDFs) add
+``SPARK_SIMPLIFIED_TRACEBACK=1`` to that environment, but RDD-backed
+Python (the ``fetch`` REST source, ``createDataFrame`` of local rows)
+does not, so a session that mixes the two would run two daemons.
+``spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK`` gives every worker the
+same environment, and the session one pool. The side effect: a caller
+who turns ``spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled``
+off still gets simplified UDF tracebacks.
+
 Locally we run ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the same
 code runs unchanged with ``--master yarn``/``k8s`` because nothing here
 assumes local mode.
@@ -60,6 +70,7 @@ def get_session(
         # --- Python boundary: always Arrow-batched -------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.daemon.module", "dataextractor_spark.pydaemon")
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
         # --- local-mode resources (ignored under a cluster manager) --
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -8,6 +8,8 @@ schema (the driver's rows-only check).
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from dataextractor_spark.registry import load_all
@@ -122,6 +124,20 @@ def test_results_do_not_depend_on_session_timezone(spark):
             rows = sorted(map(tuple, df.collect()))
             assert rows == utc_rows.setdefault(name, rows), (tz, name)
         assert s.conf.getAll == conf0, tz
+
+
+def test_bucketed_query_keeps_its_own_tables(spark):
+    """join_bucketed_colocated saves its bucketed tables under fixed
+    names. Building it again on a larger catalog must not change what a
+    frame built earlier reads: each build's tables get their own
+    location, not a shared warehouse directory."""
+    larger = os.path.join(os.path.dirname(SF_ORACLE), "sf0.01")
+    if not os.path.isdir(larger):
+        pytest.skip("no sf0.01 catalog next to the oracle catalog")
+    spec = SPECS["join_bucketed_colocated"]
+    first = spec.fn(spark, SF_ORACLE)
+    spec.fn(spark, larger)
+    compare_to_oracle(first, spec.oracle, SF_ORACLE)
 
 
 def test_entry_smoke(spark):

@@ -1250,10 +1250,9 @@ def test_funnel_steps_are_pinned_and_keyed(spark):
 
 
 def test_write_bucketed_rejects_non_identifier_names(spark):
-    """The table name reaches both a SQL statement and an rmtree'd
-    filesystem path — anything beyond a plain identifier must raise
-    before either is touched (e.g. '../..' would escape the
-    warehouse directory)."""
+    """The table name becomes both a table identifier and a directory
+    name — anything beyond a plain identifier must raise before either
+    is used (e.g. '../..' would escape the scratch directory)."""
     import pytest
 
     df = spark.range(1)

@@ -74,6 +74,36 @@ def test_zip_directory_is_reread_only_when_the_archive_changed(tmp_path):
     assert proc.returncode == 0 and proc.stdout.strip() == "ok", proc.stderr
 
 
+# Prints "ok" when a get_session session runs RDD-backed and SQL Python
+# through one worker factory. A fresh process, because the suite's
+# session also runs Python data sources, whose planner workers are
+# factories of their own.
+ONE_POOL_CHECK = r"""
+from pyspark.sql import functions as F
+from dataextractor_spark.session import get_session
+from dataextractor_spark.sources.rest import FixtureTransport, RestRequest, fetch
+
+spark = get_session(app_name="one-worker-pool", master="local[2]", shuffle_partitions=2)
+fx = FixtureTransport({"/a": (200, "{}"), "/b": (200, "[]")})
+assert fetch(spark, [RestRequest("/a"), RestRequest("/b")], lambda: fx).count() == 2
+spark.range(4).mapInPandas(lambda it: it, "id long").collect()
+spark.range(4).select(F.udf(lambda x: x + 1, "long")("id")).collect()
+spark.createDataFrame([(1, "a"), (2, "b")], "n int, s string").collect()
+workers = spark.sparkContext._jvm.org.apache.spark.SparkEnv.get().pythonWorkers()
+assert workers.size() == 1, workers.keySet().toString()
+spark.stop()
+print("ok")
+"""
+
+
+def test_rdd_and_sql_python_share_one_worker_pool():
+    proc = subprocess.run(
+        [sys.executable, "-c", ONE_POOL_CHECK],
+        cwd=ROOT, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0 and proc.stdout.strip().endswith("ok"), proc.stderr[-3000:]
+
+
 def test_python_workers_run_the_engine_daemon(spark):
     def probe(_):
         import zipimport

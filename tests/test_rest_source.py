@@ -414,7 +414,7 @@ def _spread_pages(n_pages: int, per_page: int, days: int) -> dict:
 def test_partitioned_full_load_writes_one_file_per_dt(spark, tmp_path):
     """A dt-partitioned load of pages that each span several days writes
     one data file per dt directory (not one per fetch partition and
-    day), and compacting that output leaves the row multiset unchanged.
+    day), so compacting that output rewrites nothing.
     Six pages, because with three a round-robin request shuffle can put
     all of them in one fetch partition and hide the file fan-out."""
     spec = DatasetSpec(
@@ -439,4 +439,5 @@ def test_partitioned_full_load_writes_one_file_per_dt(spark, tmp_path):
     before = rows()
     rep = compact(spark, path, ["dt"])
     assert rep.files_before == rep.files_after == 4
+    assert rep.rows_rewritten == 0
     assert rows() == before
